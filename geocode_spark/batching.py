@@ -9,11 +9,12 @@ survive on disk, and every run writes a new timestamped file
     ``batch_id = pmod(xxhash64(primary_key), n)`` — a pure function of the
     key, independent of partitioning/parallelism, so batch membership is
     stable across runs and cluster sizes;
-  * each batch is written atomically (Spark's directory-commit protocol,
-    ``_SUCCESS`` marker) to ``{out}/batch_id={k}/``, then a ledger record
+  * ONE job writes every pending batch to ``{out}/batch_id={k}/``, then ONE
+    ledger job reads them back and a record per batch
     ``{out}/_ledger/batch-{k}.json`` is committed via tmp-file + rename;
   * resume = skip every batch whose ledger record exists (the anti-join of
-    SURVEY F9 — done driver-side since the ledger is tiny);
+    SURVEY F9 — done driver-side since the ledger is tiny); the pending
+    filter on the key runs at the source scan, below the Arrow kernels;
   * the ledger record carries the reference's metrics (total/fail/success/
     failure-rate/avg-score, geocode.py:136-158) **plus per-partition
     lineage**: rows and failures per physical task partition, derived from a
@@ -34,6 +35,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import ENGINE_NAME, __version__
 from .flowcontrol import format_time
@@ -77,38 +79,60 @@ def _commit_ledger(out_dir: str, batch_id: int, record: dict) -> None:
     os.replace(tmp, _ledger_path(out_dir, batch_id))  # atomic on POSIX
 
 
-def _batch_metrics(spark: SparkSession, batch_dir: str) -> dict:
-    """Metrics + per-partition lineage from the committed batch files."""
-    if not os.path.isdir(batch_dir):
-        # an EMPTY batch: partitionBy writes no directory for it — commit a
-        # zero record (failure_rate 100 is the reference's div-by-zero rule)
-        return {"total": 0, "fail": 0, "success": 0, "score_sum": 0,
-                "failure_rate": 100, "average_score": "n/a", "partitions": []}
-    df = spark.read.parquet(batch_dir)
+def _pending_plan(result_df: DataFrame, n_batches: int, pending: list,
+                  key: str) -> DataFrame:
+    """The write plan for the ``pending`` batches. A partial run's batch
+    filter goes on BEFORE the nondeterministic lineage column, so Catalyst
+    can push it through the deterministic projections and Arrow kernels to
+    the source scan (pinned by tests/test_plans.py)."""
+    df = with_batch_id(result_df, n_batches, key=key)
+    if len(pending) < n_batches:
+        df = df.filter(F.col("batch_id").isin(pending))
+    return df.withColumn(LINEAGE_COL, F.spark_partition_id())
+
+
+def _ledger_metrics(spark: SparkSession, out_dir: str, written: StructType,
+                    pending: list) -> dict:
+    """{batch_id: metrics + per-partition lineage} of the ``pending``
+    batches, from their committed files in ONE Spark job: the read names its
+    schema (no inference job), and ``coalesce(1)`` keeps the aggregate in
+    one task (a keyed groupBy's shuffle runs as a job of its own under
+    adaptive execution). An empty batch has no directory: zero record."""
     # geocode batches carry (message, score); any other relation (e.g. the
-    # corpus job's canonical docs) still gets per-partition row lineage,
-    # with the failure/score metrics degrading to zero/n-a
-    has_geo = "message" in df.columns and "score" in df.columns
-    failed = (
-        F.col("message").isNotNull() if has_geo else F.lit(False)
-    )
-    score = F.col("score") if has_geo else F.lit(0)
-    rows = (
-        df.groupBy(LINEAGE_COL)
-        .agg(
-            F.count("*").alias("rows"),
-            F.sum(F.when(failed, 1).otherwise(0)).alias("fail"),
-            F.sum(F.when(~failed, score)).alias("score_sum"),
+    # corpus job's canonical docs) gets row lineage with zero/n-a metrics
+    has_geo = {"message", "score"} <= set(written.names)
+    groups = {k: [] for k in pending}
+    dirs = [os.path.join(out_dir, f"batch_id={k}") for k in pending]
+    dirs = [d for d in dirs if os.path.isdir(d)]
+    if dirs:
+        cols = ["batch_id", LINEAGE_COL] + (["message", "score"] if has_geo else [])
+        df = (
+            spark.read.schema(StructType([written[c] for c in cols]))
+            .option("basePath", out_dir).parquet(*dirs).coalesce(1)
         )
-        .orderBy(LINEAGE_COL)
-        .collect()
-    )
+        failed = F.col("message").isNotNull() if has_geo else F.lit(False)
+        score = F.col("score") if has_geo else F.lit(0)
+        for r in (
+            df.groupBy("batch_id", LINEAGE_COL)
+            .agg(
+                F.count("*").alias("rows"),
+                F.sum(F.when(failed, 1).otherwise(0)).alias("fail"),
+                F.sum(F.when(~failed, score)).alias("score_sum"),
+            )
+            .orderBy("batch_id", LINEAGE_COL).collect()
+        ):
+            groups[r["batch_id"]].append(r)
+    return {k: _batch_record(rows) for k, rows in groups.items()}
+
+
+def _batch_record(rows: list) -> dict:
+    """One batch's ledger metrics from its (rows, fail, score_sum) groups."""
     lineage = [
         {"partition_id": r[LINEAGE_COL], "rows": r["rows"], "fail": int(r["fail"])}
         for r in rows
     ]
-    total = sum(r["rows"] for r in rows)
-    fail = sum(int(r["fail"]) for r in rows)
+    total = sum(p["rows"] for p in lineage)
+    fail = sum(p["fail"] for p in lineage)
     score_sum = sum(int(r["score_sum"] or 0) for r in rows)
     success = total - fail
     return {
@@ -137,18 +161,18 @@ def run_resumable(
     as n_batches independently-committed, resumable batches.
 
     ONE source pass: every pending batch is written by a single
-    ``partitionBy("batch_id")`` job under dynamic partition overwrite (the
-    previous per-batch-filter loop re-evaluated the full plan n_batches
-    times — n_batches x scan amplification at 100 TB). Committed partitions
-    are untouched on resume (dynamic overwrite replaces only the partitions
-    the job writes; a crashed job left no ledger, so its partial partitions
-    are rewritten wholesale). The per-batch ledger record is committed AFTER
-    the write job from the batch's landed files, so it still describes what
-    is actually on disk.
+    ``partitionBy("batch_id")`` job under dynamic partition overwrite.
+    Committed partitions are untouched on resume (dynamic overwrite replaces
+    only the partitions the job writes; a crashed job left no ledger, so its
+    partial partitions are rewritten wholesale). After the write, ONE ledger
+    job reads back the rewritten batches and a record per batch is
+    committed, so each record describes what is actually on disk.
 
-    The plan must be DETERMINISTIC in its key column (batch membership is a
-    pure key function); non-deterministic inputs (``limit()``, sampling,
-    ``rand()``) would give reruns inconsistent batch membership.
+    The key column must come from the source through deterministic
+    projections (no ``limit()``, sampling or ``rand()``, no
+    nondeterministic UDF in between): batch membership is a pure key
+    function, and only then does a resume's pending-batch filter reach the
+    source scan instead of running above the whole plan.
 
     status_log (A4, reference geocode.py:150-162,256-258): optional callback
     receiving the reference's three-line status block — cumulative Total
@@ -163,15 +187,37 @@ def run_resumable(
     _write_run_meta(spark, out_dir, n_batches, resume=resume)
     done = completed_batches(out_dir) if resume else set()
     pending = [k for k in range(n_batches) if k not in done]
-    batched = with_batch_id(result_df, n_batches, key=key).withColumn(
-        LINEAGE_COL, F.spark_partition_id()
-    )
     if pending:
-        _write_pending_and_commit(
-            spark,
-            batched.filter(F.col("batch_id").isin(pending)),
-            out_dir, pending, n_batches, log, status_log=status_log,
+        plan = _pending_plan(result_df, n_batches, pending, key)
+        w0 = time.perf_counter()
+        (
+            plan.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(out_dir)
         )
+        job_seconds = round(time.perf_counter() - w0, 3)
+        # seeded from the batches committed BEFORE this call (the resume
+        # case), then fed each record as it commits
+        status_acc = (
+            _StatusAccumulator(out_dir, done) if status_log is not None else None
+        )
+        for k, metrics in _ledger_metrics(spark, out_dir, plan.schema,
+                                          pending).items():
+            record = {
+                "batch_id": k,
+                "engine": f"{ENGINE_NAME}/{__version__}",
+                "seconds": job_seconds,  # the shared single-pass write job
+                **metrics,
+            }
+            _commit_ledger(out_dir, k, record)
+            log(
+                f"batch {k}/{n_batches}: {record['total']} rows, "
+                f"{record['fail']} failed (job {format_time(job_seconds)})"
+            )
+            if status_acc is not None:
+                status_acc.add(record)
+                status_acc.emit(status_log)
     return _summarize(out_dir, n_batches, sorted(done), t0)
 
 
@@ -206,14 +252,13 @@ def _write_run_meta(
 
 class _StatusAccumulator:
     """Running totals over committed ledgers (the cumulative log_status
-    block): seeded once from the ledgers already on disk, then fed each new
-    record as it commits — O(1) driver file I/O per commit instead of
-    re-reading every ledger every time."""
+    block, and the run summary): seeded once from the ledgers of the
+    batches ``done``, then fed each new record as it commits."""
 
-    def __init__(self, out_dir: str):
+    def __init__(self, out_dir: str, done):
         self.total = self.fail = 0
-        self.score_sum: float | None = 0.0
-        for k in completed_batches(out_dir):
+        self.score_sum: int | None = 0
+        for k in done:
             with open(_ledger_path(out_dir, k)) as fh:
                 self.add(json.load(fh))
 
@@ -234,53 +279,12 @@ class _StatusAccumulator:
         status_log(log_status_lines(self.total, self.fail, self.score_sum))
 
 
-def _write_pending_and_commit(spark, pending_df, out_dir, pending, n_batches,
-                              log, status_log=None) -> None:
-    """The shared single-pass write + post-commit ledger step."""
-    w0 = time.perf_counter()
-    (
-        pending_df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(out_dir)
-    )
-    job_seconds = round(time.perf_counter() - w0, 3)
-    # seed from batches committed BEFORE this call (the resume case), then
-    # accumulate in-loop
-    status_acc = _StatusAccumulator(out_dir) if status_log is not None else None
-    for k in pending:
-        batch_dir = os.path.join(out_dir, f"batch_id={k}")
-        record = {
-            "batch_id": k,
-            "engine": f"{ENGINE_NAME}/{__version__}",
-            "seconds": job_seconds,  # the shared single-pass write job
-            **_batch_metrics(spark, batch_dir),
-        }
-        _commit_ledger(out_dir, k, record)
-        log(
-            f"batch {k}/{n_batches}: {record['total']} rows, "
-            f"{record['fail']} failed (job {format_time(job_seconds)})"
-        )
-        if status_acc is not None:
-            status_acc.add(record)
-            status_acc.emit(status_log)
-
-
 def _summarize(out_dir: str, n_batches: int, skipped: list, t0: float) -> dict:
-    summary = {"batches": n_batches, "skipped": skipped, "total": 0,
-               "fail": 0, "success": 0, "score_sum": 0}
-    for k in range(n_batches):
-        with open(_ledger_path(out_dir, k)) as fh:
-            rec = json.load(fh)
-        summary["total"] += rec["total"]
-        summary["fail"] += rec["fail"]
-        summary["success"] += rec["success"]
-        if summary["score_sum"] is not None and "score_sum" in rec:
-            summary["score_sum"] += rec["score_sum"]
-        else:
-            summary["score_sum"] = None  # pre-score_sum ledger resumed
-    summary["seconds"] = round(time.perf_counter() - t0, 3)
-    return summary
+    acc = _StatusAccumulator(out_dir, range(n_batches))
+    return {"batches": n_batches, "skipped": skipped, "total": acc.total,
+            "fail": acc.fail, "success": acc.total - acc.fail,
+            "score_sum": acc.score_sum,
+            "seconds": round(time.perf_counter() - t0, 3)}
 
 
 # ------------------------------------------------- bucket-aligned staged runs
@@ -327,24 +331,15 @@ def run_resumable_staged(
     """run_resumable over a bucket-aligned staged source: pending batches are
     read with partition pruning (only their directories are scanned), pushed
     through ``transform`` (e.g. the geocode plan builder; identity when
-    None), and committed exactly like run_resumable. batch_id is re-derived
-    from the key after the transform — it is a pure key function, so staged
-    assignment and output assignment always agree."""
-    t0 = time.perf_counter()
-    _write_run_meta(spark, out_dir, n_batches, resume=resume)
+    None), and handed to run_resumable, which re-derives batch_id from the
+    key after the transform — a pure key function, so staged assignment and
+    output assignment always agree."""
     done = completed_batches(out_dir) if resume else set()
     pending = [k for k in range(n_batches) if k not in done]
-    if pending:
-        src = read_staged_batches(spark, staged_dir, pending).drop("batch_id")
-        result = transform(src) if transform is not None else src
-        batched = with_batch_id(result, n_batches, key=key).withColumn(
-            LINEAGE_COL, F.spark_partition_id()
-        )
-        _write_pending_and_commit(
-            spark, batched, out_dir, pending, n_batches, log,
-            status_log=status_log,
-        )
-    return _summarize(out_dir, n_batches, sorted(done), t0)
+    src = read_staged_batches(spark, staged_dir, pending).drop("batch_id")
+    result = transform(src) if transform is not None else src
+    return run_resumable(spark, result, out_dir, n_batches=n_batches, key=key,
+                         resume=resume, log=log, status_log=status_log)
 
 
 def read_results(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -47,9 +47,11 @@ def _extract_batch(text: pd.Series) -> pd.DataFrame:
     return ex
 
 
-# asNondeterministic: extraction is a pure function of `text`; the flag only
-# stops Catalyst from substituting the UDF into pushed-down filters (which
-# would run the Arrow stage twice) — it does not change results.
+# Both kernels are pure functions of `text`. This one stays flagged because
+# extract_addresses(keep_all=False) filters on its output, which Catalyst
+# would otherwise substitute into a pushed-down filter (two evaluations).
+# The fused kernel below is deterministic, so source-column filters (a
+# resume's batch key) push below it; tests/test_plans.py pins one stage.
 _extract_udf = F.pandas_udf(_extract_batch, _OUT_TYPE).asNondeterministic()
 
 
@@ -157,7 +159,7 @@ def _extract_parse_batch(text: pd.Series) -> pd.DataFrame:
         return pd.DataFrame(rows)
 
 
-_extract_parse_udf = F.pandas_udf(_extract_parse_batch, _FULL_TYPE).asNondeterministic()
+_extract_parse_udf = F.pandas_udf(_extract_parse_batch, _FULL_TYPE)
 
 
 def extract_and_parse(pages: DataFrame, progress_acc=None) -> DataFrame:

@@ -220,12 +220,12 @@ def _parse_batch(s: pd.Series) -> pd.DataFrame:
     )
 
 
-# asNondeterministic: the parse IS pure, but the flag stops Catalyst from
-# substituting the UDF into pushed-down filters / collapsing its project —
-# which would re-evaluate the Arrow stage once per referencing expression
-# and break exchange reuse across the candidate-union branches (the
-# geocode operator relies on one shared exchange over this projection).
-parse_street_udf = F.pandas_udf(_parse_batch, _PARSE_TYPE).asNondeterministic()
+# Deterministic: the parse is a pure function of the cleansed street, so
+# filters on source columns (a resume's batch-key predicate) are pushed
+# below it to the scan. No plan filters on its output, and Catalyst keeps a
+# projection that references it several times uncollapsed, so the Arrow
+# stage runs once; tests/test_plans.py pins exactly one ArrowEvalPython.
+parse_street_udf = F.pandas_udf(_parse_batch, _PARSE_TYPE)
 
 
 def parse_street_struct(cleansed: Column) -> Column:

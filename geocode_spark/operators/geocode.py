@@ -428,23 +428,19 @@ def geocode_parsed(
             better, F.struct(k.alias("k"), c.alias("c"))
         ).otherwise(acc)
 
-    best = F.aggregate(F.col("cands"), init, _fold)["c"]
     # F5 precedence: a captured per-row error forces the unmatched error-row
     # shape (x=0/y=0/score=0, message=error) even if a candidate would match
     # — the reference's exception capture fires before any match is written.
     j = j.withColumn(
-        "m", F.when(F.col("error").isNull(), best)
+        "best",
+        F.when(F.col("error").isNull(), F.aggregate(F.col("cands"), init, _fold)),
     ).drop("cands")
 
-    m = F.col("m")
-    # the raw candidate struct carries no computed score; derive the
-    # winner's once (same _score arithmetic the fold ranked it by)
-    m_score = (
-        m["base_score"]
-        - _dir_penalty(F.col("predir"), m["l_predir"])
-        - _dir_penalty(F.col("sufdir"), m["l_sufdir"])
-        - _type_penalty(F.col("stype"), m["l_stype"])
-    ).cast("bigint")
+    m = F.col("best")["c"]
+    # the winner's score is the leading digits of its rank key: every
+    # score is >= 25 and the tiebreak part is < 10^9 (_rank_key), so
+    # integer division recovers it exactly without a second _score tree
+    m_score = F.expr("best.k div 1000000000")
     # Position along the winning segment; exact matchers are degenerate
     # segments (from=to -> t=0 -> x0 bit-exact).
     t = F.when(

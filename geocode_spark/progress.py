@@ -19,7 +19,7 @@ never touches individual rows, so the Spark-native analog has two halves:
   boundary, with elapsed time and running rate.
 - **status block** — failure rate and average score exist only after the
   locator join, which runs JVM-side (no Python hook). They are produced
-  per committed batch by the ledger metrics (batching._batch_metrics,
+  per committed batch by the ledger metrics (batching._ledger_metrics,
   A1-A3), and ``log_status_lines`` renders the reference's exact
   three-line block from running totals — emitted after every batch commit
   and at job end (A5 parity, geocode.py:260-261).
@@ -72,16 +72,15 @@ def log_status_lines(total: int, fail: int, score_sum: float) -> list:
 def counting_pandas_udf(batch_fn, out_type, acc):
     """Wrap a pandas batch kernel so every Arrow batch adds its row count to
     the accumulator `acc`. Semantics are untouched — same kernel, same output
-    type, same asNondeterministic flag as the unwrapped UDFs (the flag stops
-    Catalyst substituting the UDF into pushed-down filters, which would run
-    the Arrow stage twice)."""
+    type, deterministic like the unwrapped kernels — so a resume counts only
+    its pending batches' rows (tests/test_progress.py pins exactly-once)."""
 
     def fn(series):
         out = batch_fn(series)
         acc.add(len(out))
         return out
 
-    return F.pandas_udf(fn, out_type).asNondeterministic()
+    return F.pandas_udf(fn, out_type)
 
 
 class ProgressReporter:

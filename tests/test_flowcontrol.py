@@ -391,3 +391,107 @@ def test_staged_resume_prunes_partitions(spark, fixtures_dir, tmp_path):
     )
     assert s2["skipped"] == [0, 2, 3]
     assert s2["total"] == s1["total"] and s2["fail"] == s1["fail"]
+
+
+def _reference_record(spark, out, k):
+    """A batch's ledger metrics computed the per-batch way: read
+    ``batch_id=k`` alone and group it by partition id."""
+    from pyspark.sql import functions as F
+
+    batch_dir = os.path.join(out, f"batch_id={k}")
+    if not os.path.isdir(batch_dir):
+        return {"total": 0, "fail": 0, "success": 0, "score_sum": 0,
+                "failure_rate": 100, "average_score": "n/a", "partitions": []}
+    failed = F.col("message").isNotNull()
+    rows = (
+        spark.read.parquet(batch_dir).groupBy("_pid")
+        .agg(
+            F.count("*").alias("rows"),
+            F.sum(F.when(failed, 1).otherwise(0)).alias("fail"),
+            F.sum(F.when(~failed, F.col("score"))).alias("score_sum"),
+        )
+        .orderBy("_pid").collect()
+    )
+    total = sum(r["rows"] for r in rows)
+    fail = sum(int(r["fail"]) for r in rows)
+    score_sum = sum(int(r["score_sum"] or 0) for r in rows)
+    success = total - fail
+    return {
+        "total": total, "fail": fail, "success": success,
+        "score_sum": score_sum,
+        "failure_rate": round(100 * fail / total) if total else 100,
+        "average_score": round(score_sum / success) if success else "n/a",
+        "partitions": [
+            {"partition_id": r["_pid"], "rows": r["rows"],
+             "fail": int(r["fail"])}
+            for r in rows
+        ],
+    }
+
+
+@pytest.mark.parametrize("n_rows,n_batches", [(1000, 4), (1000, 16), (5, 16)])
+def test_ledger_parity_and_one_job(spark, tmp_path, monkeypatch, n_rows,
+                                   n_batches):
+    """Every ledger record equals (apart from ``seconds``) the per-batch
+    reference, on a fresh run and on a resume of 2 lost batches, including
+    empty batches (more batches than rows); the ledger step is exactly one
+    Spark job whatever n_batches is."""
+    from pyspark.sql import functions as F
+
+    from geocode_spark import ENGINE_NAME, __version__, batching
+
+    engine = f"{ENGINE_NAME}/{__version__}"
+    sc = spark.sparkContext
+    jobs = []
+    real = batching._ledger_metrics
+
+    def counted(*args, **kwargs):
+        group = f"ledger-step-{len(jobs)}-{n_batches}-{n_rows}"
+        sc.setJobGroup(group, "ledger step")
+        try:
+            return real(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+    monkeypatch.setattr(batching, "_ledger_metrics", counted)
+
+    i = F.col("id")
+    result = spark.range(0, n_rows, numPartitions=3).select(
+        i.cast("string").alias("primary_key"),
+        F.when(i % 7 == 0, F.lit("No address candidates found."))
+        .alias("message"),
+        F.when(i % 7 == 0, F.lit(0)).otherwise(70 + i % 31)
+        .cast("bigint").alias("score"),
+    )
+    out = str(tmp_path / "run")
+
+    def check_ledgers():
+        for k in range(n_batches):
+            with open(batching._ledger_path(out, k)) as fh:
+                rec = json.load(fh)
+            rec.pop("seconds")
+            want = _reference_record(spark, out, k)
+            assert rec == {"batch_id": k, "engine": engine, **want}, k
+
+    s1 = run_resumable(spark, result, out, n_batches=n_batches,
+                       log=lambda m: None)
+    assert s1["total"] == n_rows
+    check_ledgers()
+    if n_rows < n_batches:
+        assert sum(
+            not os.path.isdir(os.path.join(out, f"batch_id={k}"))
+            for k in range(n_batches)
+        ) >= n_batches - n_rows  # the zero records were compared too
+
+    lost = [k for k in range(n_batches)
+            if os.path.isdir(os.path.join(out, f"batch_id={k}"))][:2]
+    for k in lost:
+        os.remove(batching._ledger_path(out, k))
+        shutil.rmtree(os.path.join(out, f"batch_id={k}"))
+    s2 = run_resumable(spark, result, out, n_batches=n_batches,
+                       log=lambda m: None)
+    assert s2["skipped"] == [k for k in range(n_batches) if k not in lost]
+    assert s2["total"] == n_rows
+    check_ledgers()
+    assert jobs == [1, 1]

@@ -72,16 +72,61 @@ def test_geocode_pages_no_sort_merge_join(spark, fixtures_dir):
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     # probe side shuffle-free: the only hash exchange builds the locator
-    # pack, which lives under the broadcast's InMemoryTableScan (the
-    # session-memoized persisted relation). Once that cache is
-    # materialized by an earlier geocode run, InMemoryRelation's string
-    # rendering repeats the cached build plan (both the substituted
-    # fragment and the original), so a raw count over the whole string
-    # double-counts an exchange that executes zero times — guard the
-    # probe side (everything above the cached pack) instead.
-    probe_side = plan.split("InMemoryTableScan")[0]
+    # pack, which lives under the BroadcastExchange (over the session-
+    # memoized persisted relation). Once that cache is materialized by an
+    # earlier geocode run, InMemoryRelation's string rendering repeats the
+    # cached build plan (both the substituted fragment and the original),
+    # so a raw count over the whole string double-counts an exchange that
+    # executes zero times — guard the probe side (the join's left child,
+    # rendered before the build side) instead.
+    probe_side, build_side = plan.split("BroadcastExchange", 1)
+    assert "pages.parquet" in probe_side  # the prefix holds the page scan
     assert _n_exchanges(probe_side) == 0
-    assert "InMemoryTableScan" in plan  # the pack is the cached relation
+    assert "InMemoryTableScan" in build_side  # the pack is the cached relation
+
+
+def _batch_filter_lines(plan: str) -> list:
+    """Indexes of the plan lines that are a Filter on the batch key hash."""
+    return [
+        i for i, line in enumerate(plan.splitlines())
+        if line.lstrip(" :+-").startswith("Filter") and "xxhash64" in line
+    ]
+
+
+@pytest.mark.parametrize("shape", ["pages", "addresses"])
+def test_resume_plan_filters_batch_key_below_kernel(spark, fixtures_dir, shape):
+    """A resume processes only its pending batches: the batch-key filter is
+    pushed below the single Arrow kernel, next to the source scan, for page
+    input (fused extract+parse) and address rows (parse) alike. Exactly one
+    ArrowEvalPython also guards against the deterministic kernels being
+    evaluated twice. With every batch pending there is no batch filter."""
+    from geocode_spark.batching import _pending_plan
+    from geocode_spark.operators.geocode import geocode
+    from geocode_spark.plans.pipeline import geocode_pages, load_locators
+
+    locs = load_locators(spark, fixtures_dir)
+    if shape == "pages":
+        pages = spark.read.parquet(f"{fixtures_dir}/pages.parquet")
+        result, source = geocode_pages(pages, locs), "pages.parquet"
+    else:
+        addr = spark.read.parquet(f"{fixtures_dir}/addresses.parquet")
+        result, source = geocode(addr, pobox=True, **locs), "addresses.parquet"
+
+    assert _plan(result).count("ArrowEvalPython") == 1
+    full = _plan(_pending_plan(result, 4, list(range(4)), "primary_key"))
+    assert full.count("ArrowEvalPython") == 1
+    assert _batch_filter_lines(full) == []
+
+    resume = _plan(_pending_plan(result, 4, [2], "primary_key"))
+    assert resume.count("ArrowEvalPython") == 1
+    lines = resume.splitlines()
+    kernel = next(i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln)
+    build = next(i for i, ln in enumerate(lines) if "BroadcastExchange" in ln)
+    (filt,) = _batch_filter_lines(resume)
+    # rendered after the kernel and before the build side = in the subtree
+    # under the kernel, on the probe side
+    assert kernel < filt < build
+    assert "FileScan" in lines[filt + 1] and source in lines[filt + 1]
 
 
 def test_no_row_at_a_time_python_udf_anywhere(spark):

@@ -192,3 +192,37 @@ def test_run_status_log_and_meta_sidecar(spark, fixtures_dir, sf_dir, tmp_path):
     assert (
         json.load(open(meta_path))["engine"] == f"{ENGINE_NAME}/{__version__}"
     )
+
+
+def test_progress_counts_only_resumed_batch(spark, fixtures_dir, sf_dir,
+                                            tmp_path):
+    # the resume's batch-key filter runs below the counting kernel, so a
+    # resume of 1 lost batch of 4 processes (and counts) only that batch's
+    # rows, not the whole input
+    import shutil
+
+    from geocode_spark.batching import _ledger_path, run_resumable
+
+    rep = ProgressReporter(spark, every=10_000, log=lambda m: None)
+    result = _result_plan(spark, fixtures_dir, sf_dir, progress_acc=rep.acc)
+    out = str(tmp_path / "run")
+    run_resumable(spark, result, out, n_batches=4, key="primary_key",
+                  log=lambda m: None)
+    assert int(rep.acc.value) == 2000
+
+    lost = json.load(open(_ledger_path(out, 2)))["total"]
+    assert 0 < lost < 2000
+    os.remove(_ledger_path(out, 2))
+    shutil.rmtree(os.path.join(out, "batch_id=2"))
+    before = int(rep.acc.value)
+    s2 = run_resumable(spark, result, out, n_batches=4, key="primary_key",
+                       log=lambda m: None)
+    assert s2["skipped"] == [0, 1, 3] and s2["total"] == 2000
+    assert int(rep.acc.value) - before == lost
+
+    # a resume=False re-run rewrites every batch: its cumulative status
+    # block starts from zero, not from the ledgers it replaces
+    blocks = []
+    run_resumable(spark, result, out, n_batches=4, key="primary_key",
+                  resume=False, log=lambda m: None, status_log=blocks.append)
+    assert blocks[-1][0] == "Total requests: 2000"
