@@ -35,21 +35,28 @@ semantics):
 Physical shape (what .explain must show): ONE pass over the input and ZERO
 shuffles. All locator sources unify into a single small relation (exact
 matches modeled as degenerate ranges from_addr = to_addr, so address points,
-centerline ranges and PO boxes share one shape), pre-grouped per join key
-(zone_key, join_name) into candidate ARRAYS and broadcast. The parsed input
-LEFT-joins it once — BroadcastHashJoin emitting exactly ONE row per input row
-— and the best candidate is selected row-locally with higher-order array
-functions: filter (house-range + accept-score threshold) -> transform (score
-+ rank_key-first struct) -> array_max (struct ordering = rank order; ranks
-are unique, so ties are impossible). Unmatched keys / empty arrays surface as
-NULL = the no-match row.
+centerline ranges and PO boxes share one shape), pre-grouped into candidate
+ARRAYS per (zone_key, join_name, block) and broadcast, where a block is a
+run of 100 house numbers (house div 100). The build side explodes each
+range over the blocks it spans, sequence(from_addr div 100, to_addr div
+100); the probe side joins on its house's block. `div` is monotone, so
+from_addr <= h <= to_addr puts h div 100 inside that sequence: every
+candidate whose range holds h is in h's array, at most once, and the
+winner is the one the street-wide array would give. The parsed input
+LEFT-joins the pack once — BroadcastHashJoin emitting exactly ONE row per
+input row — and the best candidate is selected row-locally by one
+aggregate fold (house-range + accept-score filter, score, rank key; ranks
+are unique, so ties are impossible). Unmatched keys surface as NULL = the
+no-match row.
 
 Every input row is handled independently and locally: no aggregation, no
 window, no exchange — the plan is embarrassingly parallel by construction,
 which is what makes N -> 4N executor scaling near-linear. Skew cannot
-concentrate (there is no shuffle key to skew); the hot-zone (Salt Lake City)
-mandate is handled by the locator ARRAY being bucket-scanned per probe row
-exactly as a hash-join bucket would be.
+concentrate (there is no shuffle key to skew), and a hot zone (Salt Lake
+City) does not lengthen the scan: a probe row folds over the candidates of
+its own 100-house block only (at most 15 on the test fixtures, where a
+street-wide array held up to 427), so the per-row cost stays flat as the
+locator count grows.
 """
 
 from __future__ import annotations
@@ -184,6 +191,11 @@ def _standardized(house: Column, predir: Column, name: Column, stype: Column,
 # never produce it (cleansing removes nothing that would create '#').
 _POBOX_NAME = "#POBOX"
 
+# House numbers per pack block: candidate arrays are keyed on PACK_KEY,
+# whose block is house div BLOCK.
+BLOCK = 100
+PACK_KEY = ("zone_key", "join_name", "block")
+
 _UNIFIED_COLS = [
     "src", "pri", "base_score", "cand_id", "grid", "zone_key", "join_name",
     "l_street_name", "l_predir", "l_stype", "l_sufdir",
@@ -271,6 +283,22 @@ def unified_locators(
     return out
 
 
+def probe_keys(parsed: DataFrame) -> DataFrame:
+    """Attach the probe side of the pack key (PACK_KEY) to a parsed relation.
+
+    Street rows join by street name, PO-box rows by the synthetic PO-box
+    name ('#' can never survive cleansing, so no street can collide with
+    it), both in the block of their house (box) number. Invalid rows have
+    join_name '' and house NULL, so block NULL — they match nothing and
+    fall out of the left join as no-match rows."""
+    return parsed.withColumn(
+        "join_name",
+        F.when(F.col("addr_type") == "POBOX", F.lit(_POBOX_NAME)).otherwise(
+            F.col("street_name")
+        ),
+    ).withColumn("block", F.expr(f"house div {BLOCK}"))
+
+
 # --------------------------------------------------------------- the operator
 def geocode(
     input_df: DataFrame,
@@ -311,11 +339,18 @@ def pack_locators(
     locators: str = "all",
     pobox: bool = False,
 ) -> DataFrame:
-    """The broadcast-side relation: locator rows pre-grouped into per-
-    (zone_key, join_name) candidate arrays so the probe join emits exactly
-    one row per input row. Exposed so callers running many geocode
-    configurations over the same locators build (and persist) it ONCE —
-    in production this is a materialized table, not a per-query groupBy."""
+    """The broadcast-side relation: locator rows pre-grouped into one
+    candidate array per PACK_KEY (zone_key, join_name, block), so the probe
+    join emits exactly one row per input row and each row scans only its
+    house block's candidates. A range is exploded over every block it
+    spans (from_addr div 100 .. to_addr div 100) before grouping; since
+    `div` is monotone, a candidate whose range holds house h lands in
+    block h div 100, so no match is lost. That costs one build row per
+    spanned block: 1.98 per centerline range on average and at most 3 on
+    the fixtures; point locators are degenerate ranges and span one.
+    Exposed so callers running many geocode configurations over the same
+    locators build (and persist) it ONCE — in production this is a
+    materialized table, not a per-query groupBy."""
     from ..caching import model_memo, persist_tracked
 
     loc = unified_locators(
@@ -328,9 +363,16 @@ def pack_locators(
         # materialized-table production shape the docstring names; every
         # geocode configuration's broadcast then reads the cached
         # relation instead of re-running the locator groupBy (~1 s per
-        # invocation at sf1.0 scale)
+        # invocation at sf1.0 scale). A reversed or NULL range holds no
+        # house; it is dropped before the explode, where sequence() would
+        # count a reversed range downwards.
+        blocks = loc.filter(F.col("from_addr") <= F.col("to_addr")).withColumn(
+            "block",
+            F.explode(F.sequence(F.expr(f"from_addr div {BLOCK}"),
+                                 F.expr(f"to_addr div {BLOCK}"))),
+        )
         return persist_tracked(
-            loc.groupBy("zone_key", "join_name").agg(
+            blocks.groupBy(*PACK_KEY).agg(
                 F.collect_list(
                     F.struct(
                         "src", "pri", "base_score", "cand_id", "grid",
@@ -371,25 +413,15 @@ def geocode_parsed(
             locators=locators, pobox=pobox,
         )
 
-    # Probe key: street rows join by street name, PO-box rows by the
-    # synthetic PO-box name ('#' can never survive cleansing, so no street
-    # can collide with it). Invalid rows have join_name '' and house NULL —
-    # they match nothing and fall out of the left join as no-match rows.
-    base = base.withColumn(
-        "join_name",
-        F.when(F.col("addr_type") == "POBOX", F.lit(_POBOX_NAME)).otherwise(
-            F.col("street_name")
-        ),
-    )
-
     if "error" not in base.columns:  # custom callers without the F5 column
         base = base.withColumn("error", F.lit(None).cast("string"))
 
+    base = probe_keys(base)
     j = base.join(
         F.broadcast(packed),
-        on=[base.zone_key == packed.zone_key, base.join_name == packed.join_name],
+        on=[base[k] == packed[k] for k in PACK_KEY],
         how="left",
-    ).drop(packed.zone_key).drop(packed.join_name)
+    ).drop(*[packed[k] for k in PACK_KEY])
 
     house = F.col("house")
 

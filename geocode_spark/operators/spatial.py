@@ -1711,22 +1711,27 @@ def radius_join(points: DataFrame, radius_m: float = RADIUS_M) -> DataFrame:
     per bucket amortizes it while keeping the identical per-cell block
     arithmetic. Integer mm^2 throughout, identical to the brute-force
     oracle's."""
-    from ..caching import persist_tracked
+    from ..caching import model_memo, persist_tracked
 
     r_mm = int(round(radius_m * 1000))
     # persist the 5-column projection: probes AND home both read it, and
     # without the pin every action recomputes the full upstream (the
     # geocode pipeline at gate scale) twice — guide §5 caching rule
-    # (reused + expensive to recompute); ~40 B/point, metadata scale
-    p = persist_tracked(points.select(
-        F.col("primary_key").alias("pk"),
-        F.round(F.col("x") * 1000.0, 0).cast("bigint").alias("xi"),
-        F.round(F.col("y") * 1000.0, 0).cast("bigint").alias("yi"),
-    ).select(
-        "pk", "xi", "yi",
-        F.expr(f"xi div {r_mm}").alias("cx"),
-        F.expr(f"yi div {r_mm}").alias("cy"),
-    ))
+    # (reused + expensive to recompute); ~40 B/point, metadata scale.
+    # Memoized per (input, radius), so repeated calls on one input share
+    # one tracked relation instead of adding a persist each.
+    def project():
+        return persist_tracked(points.select(
+            F.col("primary_key").alias("pk"),
+            F.round(F.col("x") * 1000.0, 0).cast("bigint").alias("xi"),
+            F.round(F.col("y") * 1000.0, 0).cast("bigint").alias("yi"),
+        ).select(
+            "pk", "xi", "yi",
+            F.expr(f"xi div {r_mm}").alias("cx"),
+            F.expr(f"yi div {r_mm}").alias("cy"),
+        ))
+
+    p = model_memo(("radius_join_points", r_mm), points, project)
     probes = p.select(
         "pk", "xi", "yi",
         # is_home marks the (0,0) probe: a same-cell pair appears in the

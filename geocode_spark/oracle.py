@@ -123,8 +123,13 @@ def candidates_sql(fix: str, locators: str = "all", pobox: bool = False,
     ON p.addr_type = 'STREET' AND p.zone_key = l.zone_key
    AND p.street_name = l.street_name AND p.house = l.house_number""")
     if locators in ("all", "roadCenterlines"):
-        interp_x = "(l.x0 + (CAST(p.house - l.from_addr AS DOUBLE) / CAST(l.to_addr - l.from_addr AS DOUBLE)) * (l.x1 - l.x0))"
-        interp_y = "(l.y0 + (CAST(p.house - l.from_addr AS DOUBLE) / CAST(l.to_addr - l.from_addr AS DOUBLE)) * (l.y1 - l.y0))"
+        # a degenerate range (from = to) sits at its start point, t = 0
+        # (the engine's interpolation), not at a division by zero
+        t = ("(CASE WHEN l.to_addr > l.from_addr THEN"
+             " CAST(p.house - l.from_addr AS DOUBLE)"
+             " / CAST(l.to_addr - l.from_addr AS DOUBLE) ELSE 0.0 END)")
+        interp_x = f"(l.x0 + {t} * (l.x1 - l.x0))"
+        interp_y = f"(l.y0 + {t} * (l.y1 - l.y0))"
         parts.append(f"""
   SELECT p.primary_key, {interp_x} AS x, {interp_y} AS y,
          CAST({BASE_SCORE_RC}

@@ -54,3 +54,23 @@ def test_clear_caches_releases_all_persisted_relations(spark, sf_dir):
     assert qs["knn_cells"](spark, sf_dir).count() >= 0
     e.clear_caches()
     assert cm.isEmpty()
+
+
+def test_radius_join_persists_once_per_input(spark):
+    """Repeated radius_join calls on one input reuse one tracked relation
+    (the memoized point projection) instead of adding a persist each."""
+    from geocode_spark import caching
+    from geocode_spark.operators.spatial import radius_join
+
+    pts = spark.createDataFrame(
+        [(f"p{i:02d}", 380000.0 + 97.0 * i, 4400000.0 + 53.0 * (i % 7))
+         for i in range(40)],
+        ["primary_key", "x", "y"],
+    )
+    n0 = len(caching._TRACKED)
+    first = sorted(radius_join(pts).collect())
+    n1 = len(caching._TRACKED)
+    second = sorted(radius_join(pts).collect())
+    assert n1 - n0 == 1
+    assert len(caching._TRACKED) == n1
+    assert first == second and first  # effect size: pairs exist

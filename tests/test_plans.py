@@ -10,6 +10,7 @@ These assert on executed-plan strings (cheap — no job runs), pinning:
 """
 
 import os
+import re
 import sys
 
 import pytest
@@ -83,6 +84,12 @@ def test_geocode_pages_no_sort_merge_join(spark, fixtures_dir):
     assert "pages.parquet" in probe_side  # the prefix holds the page scan
     assert _n_exchanges(probe_side) == 0
     assert "InMemoryTableScan" in build_side  # the pack is the cached relation
+    # both sides join on the full pack key, the house block included
+    (join,) = [ln for ln in plan.splitlines() if "BroadcastHashJoin" in ln]
+    sides = re.match(r".*BroadcastHashJoin \[(.*?)\], \[(.*?)\]", join)
+    for keys in sides.groups():
+        names = [k.split("#")[0] for k in keys.split(", ")]
+        assert names == ["zone_key", "join_name", "block"], join
 
 
 def _batch_filter_lines(plan: str) -> list:
