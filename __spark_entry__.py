@@ -136,7 +136,7 @@ def _q_extract(spark, sf_dir):
 
     fix = _fix(sf_dir)
     pages = spark.read.parquet(f"{fix}/pages.parquet")
-    return extract_addresses(pages, keep_all=True)
+    return extract_addresses(pages)
 
 
 def _q_geocode_pages(spark, sf_dir):

@@ -18,8 +18,8 @@ Three implementations, all asserted equal in tests/test_cleansing.py:
   * py_*        — pure-Python oracle (re-derived from the spec above)
   * *_col       — native Catalyst column expressions (JVM hot path; Java regex
                   and Python re agree on the ASCII classes used here)
-  * pandas UDF  — Arrow-vectorized variant (pd.Series.str ops, Python `re`
-                  engine) proving the input_hint "vectorized pandas UDFs" path
+  * pd_*        — Arrow-vectorized pandas twins (pd.Series.str ops, Python `re`
+                  engine), run inside extraction's fused kernel
 """
 
 from __future__ import annotations
@@ -104,13 +104,3 @@ def pd_cleanse_zone(s: pd.Series) -> pd.Series:
     z = z.str.replace(_SPACES, " ", regex=True).str.strip()
     trunc = z.str.len().gt(0) & z.str.startswith("8")
     return z.where(~trunc, z.str.slice(0, 5))
-
-
-def register_pandas_udfs(spark):
-    """Register the Arrow-vectorized variants as SQL-callable UDFs."""
-    from pyspark.sql.types import StringType
-
-    spark.udf.register(
-        "cleanse_street_pd", F.pandas_udf(pd_cleanse_street, StringType())
-    )
-    spark.udf.register("cleanse_zone_pd", F.pandas_udf(pd_cleanse_zone, StringType()))

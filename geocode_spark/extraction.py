@@ -47,27 +47,22 @@ def _extract_batch(text: pd.Series) -> pd.DataFrame:
     return ex
 
 
-# Both kernels are pure functions of `text`. This one stays flagged because
-# extract_addresses(keep_all=False) filters on its output, which Catalyst
-# would otherwise substitute into a pushed-down filter (two evaluations).
-# The fused kernel below is deterministic, so source-column filters (a
-# resume's batch key) push below it; tests/test_plans.py pins one stage.
-_extract_udf = F.pandas_udf(_extract_batch, _OUT_TYPE).asNondeterministic()
+# Both kernels are pure functions of `text` and deterministic, so
+# source-column filters (a resume's batch key) push below them;
+# tests/test_plans.py pins one stage.
+_extract_udf = F.pandas_udf(_extract_batch, _OUT_TYPE)
 
 
-def extract_addresses(pages: DataFrame, keep_all: bool = True) -> DataFrame:
+def extract_addresses(pages: DataFrame) -> DataFrame:
     """pages(url, text, ...) -> (url, street, zone).
 
-    keep_all=True keeps pages without an address (street/zone NULL) so the
-    downstream geocode preserves one-output-row-per-input-row accounting
-    (reference geocode.py:171-250). Column pruning: only url+text are read.
+    Keeps pages without an address (street/zone NULL) so the downstream
+    geocode preserves one-output-row-per-input-row accounting (reference
+    geocode.py:171-250). Column pruning: only url+text are read.
     """
-    out = pages.select(
+    return pages.select(
         "url", _extract_udf(F.col("text")).alias("a")
     ).select("url", F.col("a.street").alias("street"), F.col("a.zone").alias("zone"))
-    if not keep_all:
-        out = out.filter(F.col("street").isNotNull())
-    return out
 
 
 _FULL_TYPE = StructType(
@@ -207,7 +202,7 @@ def extract_and_parse(pages: DataFrame, progress_acc=None) -> DataFrame:
 
 
 def extract_oracle_sql(pages_path: str) -> str:
-    """DuckDB mirror of extract_addresses (keep_all form)."""
+    """DuckDB mirror of extract_addresses."""
     return f"""
 SELECT url,
        nullif(regexp_extract(text, '{ADDRESS_PATTERN}', 1), '') AS street,

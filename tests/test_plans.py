@@ -5,6 +5,7 @@ These assert on executed-plan strings (cheap — no job runs), pinning:
  - exchange counts for the temporal window family (exactly one) and
    stratified sampling (zero);
  - the geocode hot path never degrades to a sort-merge join;
+ - the unfused extraction kernel is planned exactly once;
  - no row-at-a-time Python UDF (BatchEvalPython) sneaks onto any query
    plan — Arrow stages (ArrowEvalPython / mapInPandas / cogroup) only.
 """
@@ -90,6 +91,15 @@ def test_geocode_pages_no_sort_merge_join(spark, fixtures_dir):
     for keys in sides.groups():
         names = [k.split("#")[0] for k in keys.split(", ")]
         assert names == ["zone_key", "join_name", "block"], join
+
+
+def test_extract_addresses_single_arrow_stage(spark):
+    """The unfused extraction kernel is deterministic, so the
+    extract_addresses query plans it exactly once."""
+    import __spark_entry__ as mod
+
+    plan = _plan(mod.queries()["extract_addresses"](spark, SF_DIR))
+    assert plan.count("ArrowEvalPython") == 1
 
 
 def _batch_filter_lines(plan: str) -> list:

@@ -662,3 +662,32 @@ def test_spatial_clusters_min_pts_boundary(spark):
     cells = {(5, 5): 4, (5, 6): 3}  # exactly at / just below min_pts=4
     rows = spatial_clusters(_cluster_points(spark, cells)).collect()
     assert [(r.n_cells, r.n_points) for r in rows] == [(1, 4)]
+
+
+def _cluster_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("points", ["success_points", "two_blobs"])
+def test_spatial_clusters_packed_equals_loop(spark, sf_dir, monkeypatch,
+                                             points):
+    """connected_components runs as driver numpy below the
+    SPARK_GRAFT_GRAPH_PACK_ROWS budget and as the distributed loop above
+    it; spatial_clusters must return identical rows on both paths."""
+    from geocode_spark.operators.spatial import spatial_clusters
+
+    if points == "success_points":
+        import __spark_entry__ as entrymod
+
+        pts = entrymod._success_points(spark, sf_dir)
+    else:
+        pts = _cluster_points(spark, {
+            (2, 2): 5, (3, 2): 6, (3, 3): 4, (9, 9): 7, (9, 10): 4,
+            (4, 4): 5, (1, 2): 3,
+        })
+    packed = _cluster_rows(spatial_clusters(pts))
+    # budget 0 sends connected_components to the distributed loop
+    monkeypatch.setenv("SPARK_GRAFT_GRAPH_PACK_ROWS", "0")
+    loop = _cluster_rows(spatial_clusters(pts))
+    assert packed == loop
+    assert packed  # effect size: the input has dense cells

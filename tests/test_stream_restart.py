@@ -9,6 +9,9 @@ starts a NEW query on the SAME checkpoint. The applyInPandasWithState state
 files — a user whose session spans the two halves must continue it — and the
 union of both phases' output must equal the batch sessionize operator
 row-for-row (exactly-once under restart: no lost and no duplicated events).
+The geocode stream gets the same treatment over page files: the union of
+both phases must equal the batch geocode_pages plan row for row, with each
+primary_key written exactly once.
 """
 
 import os
@@ -227,3 +230,75 @@ def test_stream_dedup_state_survives_process_restart(spark, sf_dir, tmp_path):
     assert len(got) == len(want), (len(got), len(want))
     assert set(got["text_hash"]) == set(want["text_hash"])
     assert got["text_hash"].nunique() == len(got)
+
+
+N_FILES = 4  # page files; phase A writes the first half, phase B the rest
+
+_GEOCODE_PHASE = r"""
+import os, sys
+sys.path[:0] = [%(repo)r, %(repo)r + "/tests"]
+from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+from geocode_spark.plans.pipeline import load_locators
+from geocode_spark.session import get_spark
+from geocode_spark.streaming.stream import stream_geocode
+
+phase, root, fix, n_files = sys.argv[1], sys.argv[2], sys.argv[3], int(sys.argv[4])
+spark = get_spark("restart-geocode-" + phase, parallelism=4, shuffle_partitions=4,
+                  small_input=True)
+spark.sparkContext.setLogLevel("ERROR")
+src, out, ckpt = f"{root}/src", f"{root}/out", f"{root}/ckpt"
+
+# file k holds the pages of url rank r with r %% n_files == k: a pure
+# function of the input, so both phases derive the identical split
+pages = spark.read.parquet(f"{fix}/pages.parquet").withColumn(
+    "_f", (F.row_number().over(Window.orderBy("url")) - 1) %% n_files
+)
+mine = range(n_files // 2) if phase == "A" else range(n_files // 2, n_files)
+for k in mine:
+    pages.filter(F.col("_f") == k).drop("_f").coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+
+q = stream_geocode(spark, src, load_locators(spark, fix), out, ckpt,
+                   available_now=True)
+q.awaitTermination()
+committed = [f for f in os.listdir(f"{ckpt}/commits") if not f.startswith(".")]
+print(f"PHASE {phase} COMMITS {len(committed)}", flush=True)
+"""
+
+
+def _run_geocode_phase(phase, root, fixtures_dir):
+    env = dict(os.environ)
+    env["PYTHONPATH"] = f"{REPO}:{REPO}/tests"
+    proc = subprocess.run(
+        [sys.executable, "-c", _GEOCODE_PHASE % {"repo": REPO}, phase, root,
+         fixtures_dir, str(N_FILES)],
+        capture_output=True, text=True, timeout=600, env=env,
+    )
+    assert proc.returncode == 0, f"phase {phase} failed:\n{proc.stderr[-3000:]}"
+    return int(proc.stdout.split(f"PHASE {phase} COMMITS ")[1].split()[0])
+
+
+def test_stream_geocode_resume_across_processes(spark, fixtures_dir, tmp_path):
+    import glob
+
+    from geocode_spark.plans.pipeline import geocode_pages, load_locators
+    from geocode_spark.streaming.stream import read_stream_results
+
+    root = str(tmp_path / "restart")
+    commits_a = _run_geocode_phase("A", root, fixtures_dir)
+    assert commits_a >= 1
+    assert len(glob.glob(f"{root}/src/part-*.parquet")) == N_FILES // 2
+    commits_b = _run_geocode_phase("B", root, fixtures_dir)
+    # phase B's commit log carries BOTH phases' batches — the new query
+    # resumed the old checkpoint instead of reprocessing from scratch
+    assert commits_b > commits_a
+    assert len(glob.glob(f"{root}/src/part-*.parquet")) == N_FILES
+
+    got = read_stream_results(spark, f"{root}/out").toPandas()
+    pages = spark.read.parquet(f"{fixtures_dir}/pages.parquet")
+    want = geocode_pages(pages, load_locators(spark, fixtures_dir)).toPandas()
+    assert got["primary_key"].is_unique
+    assert set(got["primary_key"]) == set(want["primary_key"])
+    assert_frames_match(got, want, label="restart_geocode")
