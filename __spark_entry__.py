@@ -36,8 +36,8 @@ def _fix(sf_dir: str) -> str:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: extract addresses from web pages, geocode against broadcast
-    locators, emit the reference's 11-column contract."""
+    """Flagship: extract addresses from web pages, geocode against the
+    shared locator index, emit the reference's 11-column contract."""
     from geocode_spark.plans.pipeline import geocode_pages, load_locators
 
     fix = _fix("/root/testdata/sf0.001")
@@ -73,10 +73,9 @@ def _q_parse(spark, sf_dir):
 
 
 def _geo(spark, sf_dir, **kw):
-    # NOT memoized: the packed locator relation recomputes from MB-scale
-    # parquet faster than a persisted collect_list relation deserializes
-    # (measured 1.16s vs 1.87s per query at sf0.1). pack_locators/packed
-    # stays the production seam for a genuinely materialized locator table.
+    # load_locators reads fresh DataFrames per call, so geocode's
+    # pack_locators finds its memoized pack by plan comparison; the pack's
+    # locator index is then memoized with it (built once per session).
     from geocode_spark.operators.geocode import geocode
     from geocode_spark.plans.pipeline import load_locators
 

@@ -7,7 +7,7 @@ geocoding toolbox (reference: /root/reference, ~700 LoC per-row HTTP client,
 - byte-identical street/zone cleansing        (cleansing.py  ~ geocode.py:40-62)
 - Utah address-grammar parsing                 (grammar.py)
 - vectorized address extraction from web text  (extraction.py)
-- broadcast locator joins + scoring + top-1    (operators/geocode.py ~ geocode.py:198-250)
+- locator index match: scoring + top-1        (operators/match.py ~ geocode.py:198-250)
 - spatial layer: Z-order cells, kNN, PIP, tiles (operators/spatial.py)
 - flow control: health probe, batch ledger      (plans/ ~ geocode.py:37,190-191,168-174)
 - 11-column result contract                     (geocode.py:33-36)

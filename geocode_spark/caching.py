@@ -45,28 +45,45 @@ _TRACKED: list[DataFrame] = []
 _MEMO: dict[tuple, tuple] = {}
 
 
-def model_memo(key: tuple, anchor: DataFrame, build):
+def model_memo(key: tuple, anchor: DataFrame, build, sources: tuple = ()):
     """Return the memoized value for (key, anchor-plan), building once.
 
     `anchor` is the source relation the model derives from; `build` is a
     zero-arg callable producing the value (typically a persist_tracked
-    relation plus its counted size, or a collected broadcast pack)."""
+    relation plus its counted size, or a collected locator index).
+    `sources` are the caller's input objects the anchor was derived from;
+    they are remembered with the entry for memo_lookup."""
     with _LOCK:
         ent = _MEMO.get(key)
     if ent is not None:
-        prev, value = ent
+        prev, _, value = ent
         try:
             if prev is anchor or (
                 prev.sparkSession is anchor.sparkSession
                 and prev.sameSemantics(anchor)
             ):
+                with _LOCK:
+                    _MEMO[key] = (prev, tuple(sources), value)
                 return value
         except Exception:
             pass  # stopped session / foreign plan — rebuild below
     value = build()
     with _LOCK:
-        _MEMO[key] = (anchor, value)
+        _MEMO[key] = (anchor, tuple(sources), value)
     return value
+
+
+def memo_lookup(key: tuple, sources: tuple):
+    """The value memoized under `key` if its entry was built or last hit
+    from these very `sources` objects (identity, no plan comparison), else
+    None: the cheap first check before deriving an anchor plan."""
+    with _LOCK:
+        ent = _MEMO.get(key)
+    if ent is None or len(ent[1]) != len(sources) or not sources:
+        return None
+    if all(a is b for a, b in zip(ent[1], sources)):
+        return ent[2]
+    return None
 
 
 def persist_tracked(df: DataFrame) -> DataFrame:

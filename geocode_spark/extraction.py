@@ -71,30 +71,82 @@ _FULL_TYPE = StructType(
         StructField("zone", StringType()),
         StructField("cleansed_street", StringType()),
         StructField("cleansed_zone", StringType()),
+        StructField("zone_key", StringType()),
     ]
     + list(_PARSE_TYPE.fields)
     + [StructField("error", StringType())]
 )
 
 
-def _extract_parse_one(t, pd_cleanse_street, pd_cleanse_zone,
-                       parse_street_py, PARSE_FIELDS) -> dict:
-    """Row-at-a-time twin of the vectorized batch path (the per-row error
-    capture fallback) — must produce identical values for healthy rows."""
-    ex = pd.Series([t], dtype="string").str.extract(ADDRESS_PATTERN, expand=True)
-    street, zone = ex.iloc[0, 0], ex.iloc[0, 1]
-    street = None if pd.isna(street) else street
-    zone = "" if pd.isna(zone) else zone
-    cs = pd_cleanse_street(pd.Series([street])).fillna("").iloc[0]
-    cz = pd_cleanse_zone(pd.Series([zone])).fillna("").iloc[0]
-    row = {"street": street, "zone": zone or None,
-           "cleansed_street": cs, "cleansed_zone": cz}
-    row.update(parse_street_py(cs))
-    row["error"] = (
-        street_too_long_msg(len(street))
-        if street is not None and len(street) > MAX_STREET_LEN else None
+def capture_per_row(kernel, error_row, *frames) -> pd.DataFrame:
+    """kernel(*frames) -> DataFrame, with the F5/P5 per-row error capture.
+
+    If the batch call raises, the kernel re-runs row at a time over
+    one-row slices of `frames` (the same code, so a healthy row's values
+    are identical), and a row that still raises becomes error_row(
+    str(ex)[:500]) (reference geocode.py:253-254) instead of failing the
+    task: one poisoned row in a trillion must not kill a job."""
+    try:
+        return kernel(*frames)
+    except Exception:
+        rows = []
+        for i in range(len(frames[0])):
+            try:
+                rows += kernel(*(f.iloc[i:i + 1] for f in frames)).to_dict(
+                    "records")
+            except Exception as ex:  # the reference's per-row capture
+                rows.append(error_row(str(ex)[:MSG_TRUNCATE]))
+        return pd.DataFrame(rows, columns=list(error_row("")))
+
+
+def _cleanse_parse(street: pd.Series, zone: pd.Series) -> pd.DataFrame:
+    from .cleansing import pd_cleanse_street, pd_cleanse_zone
+    from .grammar import PARSE_FIELDS, parse_street_py
+
+    street = street.reset_index(drop=True)
+    cs = pd_cleanse_street(street).fillna("")
+    # missing zone cleanses to '' (cleanse_input coalesces the same way)
+    cz = pd_cleanse_zone(zone.reset_index(drop=True).fillna("")).fillna("")
+    parsed = pd.DataFrame([parse_street_py(v) for v in cs],
+                          columns=list(PARSE_FIELDS))
+    err = pd.Series(
+        [street_too_long_msg(int(n)) if pd.notna(n) and n > MAX_STREET_LEN
+         else None for n in street.str.len()],
+        dtype="object",
     )
+    return pd.concat([cs.rename("cleansed_street"),
+                      cz.rename("cleansed_zone"),
+                      cz.str.upper().rename("zone_key"), parsed,
+                      err.rename("error")], axis=1)
+
+
+def _parse_error_row(message: str) -> dict:
+    from .grammar import PARSE_FIELDS
+
+    row = {"street": None, "zone": None,
+           "cleansed_street": "", "cleansed_zone": "", "zone_key": ""}
+    row.update({f: None for f in PARSE_FIELDS})
+    row["error"] = message
     return row
+
+
+def cleanse_parse_batch(street: pd.Series, zone: pd.Series) -> pd.DataFrame:
+    """The pandas twin of operators.geocode.parse_input(cleanse_input(df)):
+    cleansed_street, cleansed_zone, zone_key, the six parse fields and the
+    F5 street-length guard `error`, for string columns (street, zone), with
+    the per-row error capture (capture_per_row)."""
+    return capture_per_row(
+        _cleanse_parse,
+        lambda m: {k: v for k, v in _parse_error_row(m).items()
+                   if k not in ("street", "zone")},
+        street.astype("string"), zone.astype("string"),
+    )
+
+
+def _extract_parse(text: pd.Series) -> pd.DataFrame:
+    out = _extract_batch(text).reset_index(drop=True)
+    return pd.concat([out, _cleanse_parse(out["street"], out["zone"])],
+                     axis=1)
 
 
 def _extract_parse_batch(text: pd.Series) -> pd.DataFrame:
@@ -106,52 +158,11 @@ def _extract_parse_batch(text: pd.Series) -> pd.DataFrame:
     one JVM<->Python Arrow boundary instead of two.
 
     Error capture (F5/P5): the vectorized path computes the deterministic
-    street-length guard as a column; if the batch path itself throws, the
-    batch re-runs row-at-a-time and any row that still throws becomes an
-    error row carrying str(ex)[:500] (reference geocode.py:253-254) instead
-    of failing the task — one poisoned row in a trillion must not kill a job.
+    street-length guard as a column; anything else that throws goes
+    through capture_per_row, and a row that still throws becomes an error
+    row with NULL street/zone carrying str(ex)[:500].
     """
-    from .cleansing import pd_cleanse_street, pd_cleanse_zone
-    from .grammar import PARSE_FIELDS, parse_street_py
-
-    try:
-        out = _extract_batch(text)
-        cs = pd_cleanse_street(out["street"]).fillna("")
-        # missing zone cleanses to '' (cleanse_input coalesces the same way)
-        cz = pd_cleanse_zone(out["zone"].fillna("")).fillna("")
-        out["cleansed_street"] = cs
-        out["cleansed_zone"] = cz
-        parsed = pd.DataFrame(
-            [parse_street_py(v) for v in cs], columns=list(PARSE_FIELDS),
-            index=out.index,
-        )
-        slen = out["street"].str.len()
-        err = pd.Series(
-            [
-                street_too_long_msg(int(n)) if pd.notna(n) and n > MAX_STREET_LEN
-                else None
-                for n in slen
-            ],
-            index=out.index, dtype="object",
-        )
-        return pd.concat([out, parsed, err.rename("error")], axis=1)
-    except Exception:
-        rows = []
-        for t in text:
-            try:
-                rows.append(
-                    _extract_parse_one(t, pd_cleanse_street, pd_cleanse_zone,
-                                       parse_street_py, PARSE_FIELDS)
-                )
-            except Exception as ex:  # the reference's per-row capture
-                row = {
-                    "street": None, "zone": None,
-                    "cleansed_street": "", "cleansed_zone": "",
-                }
-                row.update({f: None for f in PARSE_FIELDS})
-                row["error"] = str(ex)[:MSG_TRUNCATE]
-                rows.append(row)
-        return pd.DataFrame(rows)
+    return capture_per_row(_extract_parse, _parse_error_row, text)
 
 
 _extract_parse_udf = F.pandas_udf(_extract_parse_batch, _FULL_TYPE)
@@ -163,8 +174,7 @@ def extract_and_parse(pages: DataFrame, progress_acc=None) -> DataFrame:
     Produces exactly what operators.geocode.parse_input(cleanse_input(
     extract_addresses(pages))) produces, with one Python boundary instead of
     two (the second boundary showed up as blocked executor time at high
-    parallelism). zone_key stays a Catalyst expression on the materialized
-    struct field.
+    parallelism).
 
     progress_acc (A4, reference geocode.py:256-258): an optional Spark
     accumulator receiving each Arrow batch's row count — the row-cadence
@@ -196,7 +206,7 @@ def extract_and_parse(pages: DataFrame, progress_acc=None) -> DataFrame:
         F.col("a.street_name").alias("street_name"),
         F.col("a.stype").alias("stype"),
         F.col("a.sufdir").alias("sufdir"),
-        F.upper(F.col("a.cleansed_zone")).alias("zone_key"),
+        F.col("a.zone_key").alias("zone_key"),
         F.col("a.error").alias("error"),
     )
 

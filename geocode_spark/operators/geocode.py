@@ -1,86 +1,76 @@
-"""The geocode match — broadcast locator joins + scoring + top-1 (SURVEY §2.3).
+"""The geocode operator: locator pack, shared index, one Arrow stage (SURVEY §2.3).
 
 The reference performs this via one HTTP GET per row against the AGRC API
 (reference geocode.py:198-208, parameterized by locators/pobox/acceptScore at
-geocode.py:201-207). Here it is pure Spark data logic:
+geocode.py:201-207). Here it is pure data logic:
 
   J1  locator selection    — union of candidate sources gated by config
-  J2  address-point match  — broadcast equi-join on (zone_key, street, house)
-  J3  centerline match     — broadcast join on (zone_key, street) + range
-                             predicate house BETWEEN from_addr AND to_addr,
-                             x/y linearly interpolated along the segment
-  J4  scoring + threshold  — deterministic penalty function, filter >= acceptScore
-                             (default 70, geocode.py:28,206; 404 message pinned
-                             at tests/test_geocode.py:89)
-  J5  top-1 per input row  — max_by over a total-order rank key (map-side
-                             partial agg; no window sort shuffle)
-  J6  pobox                — extra broadcast source when pobox=True (geocode.py:27,117)
-  J7  output x/y in the locator's spatial reference (26912, geocode.py:25)
+                             (unified_locators, pack_locators)
+  J2-J6  the match         — operators.match.match, one vectorized kernel
+                             over each Arrow batch: address points,
+                             centerline ranges (x/y interpolated along the
+                             segment) and PO boxes scored together, filter
+                             >= acceptScore (default 70, geocode.py:28,206),
+                             top-1 per row; scoring spec in match.py
+  J7  output x/y in the locator's spatial reference (26912, geocode.py:25),
+      re-expressed by operators.projection when another wkid is asked for
 
-Scoring spec (frozen — the reference's scorer is server-side and unobservable;
-this is OUR contract, validated against the reference's thresholding + output
-semantics):
+Physical shape (what .explain must show): ONE ArrowEvalPython over the
+input scan, no join and no exchange. All locator sources unify into a single
+small relation (exact matches modeled as degenerate ranges from_addr =
+to_addr, so address points, centerline ranges and PO boxes share one shape),
+pre-grouped into candidate ARRAYS per PACK_KEY (zone_key, join_name, block),
+where a block is a run of 100 house numbers (house div 100): the build side
+explodes each range over the blocks it spans, sequence(from_addr div 100,
+to_addr div 100). `div` is monotone, so from_addr <= h <= to_addr puts
+h div 100 inside that sequence: every candidate whose range holds h is in
+h's array, at most once. That pack is persisted once per locator set
+(pack_locators), collected once into a columnar LocatorIndex (locator_index)
+and shipped to the workers as one memory-mapped file; each query's Arrow
+stage then runs cleanse/parse (or extraction) and the match in the same
+Python round trip:
 
-  base: 100 address point / 100 USPS pobox / 90 road centerline
-  direction penalty (prefix and suffix, each):
-      equal (incl. both empty) -> 0
-      input empty, locator set -> 5
-      input set, locator empty -> 15
-      both set, different      -> 25
-  street-type penalty: equal -> 0 | input empty -> 5 | locator empty -> 10
-      | different -> 15
-  candidate priority for equal scores: USPS(0) > addressPoints(1) >
-      roadCenterlines(2); final tiebreak lowest cand_id.
-
-Physical shape (what .explain must show): ONE pass over the input and ZERO
-shuffles. All locator sources unify into a single small relation (exact
-matches modeled as degenerate ranges from_addr = to_addr, so address points,
-centerline ranges and PO boxes share one shape), pre-grouped into candidate
-ARRAYS per (zone_key, join_name, block) and broadcast, where a block is a
-run of 100 house numbers (house div 100). The build side explodes each
-range over the blocks it spans, sequence(from_addr div 100, to_addr div
-100); the probe side joins on its house's block. `div` is monotone, so
-from_addr <= h <= to_addr puts h div 100 inside that sequence: every
-candidate whose range holds h is in h's array, at most once, and the
-winner is the one the street-wide array would give. The parsed input
-LEFT-joins the pack once — BroadcastHashJoin emitting exactly ONE row per
-input row — and the best candidate is selected row-locally by one
-aggregate fold (house-range + accept-score filter, score, rank key; ranks
-are unique, so ties are impossible). Unmatched keys surface as NULL = the
-no-match row.
+  geocode()         street/zone -> pd_cleanse_* twins -> parse -> F5
+                    street-length guard -> match
+  geocode_parsed()  staged parsed rows -> match
+  plans.pipeline.geocode_pages   pages -> extract+cleanse+parse -> match
 
 Every input row is handled independently and locally: no aggregation, no
 window, no exchange — the plan is embarrassingly parallel by construction,
 which is what makes N -> 4N executor scaling near-linear. Skew cannot
 concentrate (there is no shuffle key to skew), and a hot zone (Salt Lake
-City) does not lengthen the scan: a probe row folds over the candidates of
-its own 100-house block only (at most 15 on the test fixtures, where a
+City) does not lengthen the scan: a probe row scores the candidates of its
+own 100-house block only (at most 15 on the test fixtures, where a
 street-wide array held up to 427), so the per-row cost stays flat as the
 locator count grows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import DEFAULT_ACCEPT_SCORE, RESULT_COLUMNS
+from .. import DEFAULT_ACCEPT_SCORE
 from ..cleansing import cleanse_street_col, cleanse_zone_col
-from ..grammar import DIRECTION_WORDS
-
-HOST = "api.mapserv.utah.gov"  # reference geocode.py:32
-LOCATOR_AP = "AddressPoints.AddressGrid"
-LOCATOR_RC = "Centerlines.StatewideRoads"
-LOCATOR_USPS = "USPS Delivery Points"  # pinned at tests/test_geocode.py:112
-
-BASE_SCORE_AP = 100
-BASE_SCORE_RC = 90
-BASE_SCORE_USPS = 100
-PRIORITY = {"usps": 0, "ap": 1, "rc": 2}
-
-# message parity: reference geocode.py:213 (F4) and tests/test_geocode.py:89 (404)
-MSG_MISSING_TMPL = "Missing required parameters for URL: https://{host}/api/v1/geocode/{street}/{zone}"
-MSG_NO_CANDIDATES = "No address candidates found with a score of {score} or better."
+from .match import (  # noqa: F401  (the matcher's constants, re-exported)
+    _POBOX_NAME,
+    BASE_SCORE_AP,
+    BASE_SCORE_RC,
+    BASE_SCORE_USPS,
+    BLOCK,
+    HOST,
+    LOCATOR_AP,
+    LOCATOR_RC,
+    LOCATOR_USPS,
+    MATCH_TYPE,
+    MSG_MISSING_TMPL,
+    MSG_NO_CANDIDATES,
+    PRIORITY,
+    IndexFile,
+    LocatorIndex,
+    match,
+)
 
 
 # ------------------------------------------------------------------ cleansing
@@ -88,8 +78,10 @@ def cleanse_input(df: DataFrame, id_col="id", street_col="street", zone_col="zon
     """Project the reference input relation and attach cleansed columns.
 
     Also attaches the F5/P5 `error` column (per-row failure capture,
-    reference geocode.py:253-254): the deterministic street-length guard —
-    the Catalyst twin of extraction's fused-kernel guard."""
+    reference geocode.py:253-254): the deterministic street-length guard.
+    The Catalyst form of what geocode()'s Arrow stage computes with
+    extraction.cleanse_parse_batch; it stages a parsed relation for
+    geocode_parsed."""
     from ..extraction import MAX_STREET_LEN
 
     street = F.col(street_col).cast("string")
@@ -125,75 +117,7 @@ def parse_input(df: DataFrame) -> DataFrame:
     )
 
 
-# ------------------------------------------------------------------- scoring
-def _dir_penalty(i: Column, l: Column) -> Column:
-    return (
-        F.when(i == l, 0).when(i == "", 5).when(l == "", 15).otherwise(25)
-    )
-
-
-def _type_penalty(i: Column, l: Column) -> Column:
-    return (
-        F.when(i == l, 0).when(i == "", 5).when(l == "", 10).otherwise(15)
-    )
-
-
-def _expand_dir(c: Column) -> Column:
-    expr = None
-    for k, v in DIRECTION_WORDS.items():
-        cond = c == k
-        expr = F.when(cond, v) if expr is None else expr.when(cond, v)
-    return expr.otherwise(F.lit(None).cast("string"))
-
-
-def _rank_key(score: Column, priority: Column, cand_id: Column) -> Column:
-    """Total order over candidates: score desc, source priority, cand_id asc."""
-    return (
-        (score.cast("bigint") * 10 + (F.lit(9) - priority)) * F.lit(100_000_000).cast("bigint")
-        + (F.lit(99_999_999).cast("bigint") - cand_id)
-    )
-
-
-def _match_address(house: Column, predir: Column, name: Column, stype: Column,
-                   sufdir: Column, grid: Column) -> Column:
-    return F.concat(
-        F.concat_ws(
-            " ",
-            house.cast("string"),
-            F.nullif(predir, F.lit("")),
-            name,
-            F.nullif(stype, F.lit("")),
-            F.nullif(sufdir, F.lit("")),
-        ),
-        F.lit(", "),
-        grid,
-    )
-
-
-def _standardized(house: Column, predir: Column, name: Column, stype: Column,
-                  sufdir: Column) -> Column:
-    return F.lower(
-        F.concat_ws(
-            " ",
-            house.cast("string"),
-            _expand_dir(predir),
-            F.nullif(name, F.lit("")),
-            F.nullif(stype, F.lit("")),
-            _expand_dir(sufdir),
-        )
-    )
-
-
-
-
 # ------------------------------------------------------ unified locator build
-# PO-box rows join under this synthetic street name; parsed street rows can
-# never produce it (cleansing removes nothing that would create '#').
-_POBOX_NAME = "#POBOX"
-
-# House numbers per pack block: candidate arrays are keyed on PACK_KEY,
-# whose block is house div BLOCK.
-BLOCK = 100
 PACK_KEY = ("zone_key", "join_name", "block")
 
 _UNIFIED_COLS = [
@@ -217,12 +141,12 @@ def unified_locators(
     locators: str = "all",
     pobox: bool = False,
 ) -> DataFrame:
-    """One broadcastable relation holding every selected candidate source.
+    """One small relation holding every selected candidate source.
 
     Exact matchers (address points J2, PO boxes J6) become degenerate ranges
-    (from_addr = to_addr), so they share the centerline range join's (J3)
-    shape and the probe side joins ONCE for all sources. Coordinates unify as
-    segments (points have x0=x1), so one interpolation expression serves all.
+    (from_addr = to_addr), so they share the centerline range match's (J3)
+    shape and a row probes ONCE for all sources. Coordinates unify as
+    segments (points have x0=x1), so one interpolation serves all.
     """
     parts = []
     if locators in ("all", "addressPoints") and address_points is not None:
@@ -283,55 +207,6 @@ def unified_locators(
     return out
 
 
-def probe_keys(parsed: DataFrame) -> DataFrame:
-    """Attach the probe side of the pack key (PACK_KEY) to a parsed relation.
-
-    Street rows join by street name, PO-box rows by the synthetic PO-box
-    name ('#' can never survive cleansing, so no street can collide with
-    it), both in the block of their house (box) number. Invalid rows have
-    join_name '' and house NULL, so block NULL — they match nothing and
-    fall out of the left join as no-match rows."""
-    return parsed.withColumn(
-        "join_name",
-        F.when(F.col("addr_type") == "POBOX", F.lit(_POBOX_NAME)).otherwise(
-            F.col("street_name")
-        ),
-    ).withColumn("block", F.expr(f"house div {BLOCK}"))
-
-
-# --------------------------------------------------------------- the operator
-def geocode(
-    input_df: DataFrame,
-    address_points: DataFrame | None = None,
-    road_centerlines: DataFrame | None = None,
-    pobox_points: DataFrame | None = None,
-    locators: str = "all",
-    pobox: bool = False,
-    accept_score: int = DEFAULT_ACCEPT_SCORE,
-    spatial_reference: int = 26912,
-    packed: DataFrame | None = None,
-) -> DataFrame:
-    """Full geocode: cleansed+parsed input -> the 11-column result contract.
-
-    input_df must have columns (id, street, zone) — pass through cleanse_input
-    +parse_input yourself for custom schemas. `locators` in
-    {'all','addressPoints','roadCenterlines'} (reference geocode.py:26,128).
-    `spatial_reference` re-expresses output x/y (J7, geocode.py:25,115,204):
-    26912 native or 4326 via the from-scratch transverse-Mercator inverse.
-    """
-    return geocode_parsed(
-        parse_input(cleanse_input(input_df)),
-        address_points=address_points,
-        road_centerlines=road_centerlines,
-        pobox_points=pobox_points,
-        locators=locators,
-        pobox=pobox,
-        accept_score=accept_score,
-        spatial_reference=spatial_reference,
-        packed=packed,
-    )
-
-
 def pack_locators(
     address_points: DataFrame | None = None,
     road_centerlines: DataFrame | None = None,
@@ -339,33 +214,37 @@ def pack_locators(
     locators: str = "all",
     pobox: bool = False,
 ) -> DataFrame:
-    """The broadcast-side relation: locator rows pre-grouped into one
-    candidate array per PACK_KEY (zone_key, join_name, block), so the probe
-    join emits exactly one row per input row and each row scans only its
-    house block's candidates. A range is exploded over every block it
+    """The locator relation pre-grouped into one candidate array per
+    PACK_KEY (zone_key, join_name, block), so each input row scans only
+    its house block's candidates. A range is exploded over every block it
     spans (from_addr div 100 .. to_addr div 100) before grouping; since
     `div` is monotone, a candidate whose range holds house h lands in
     block h div 100, so no match is lost. That costs one build row per
     spanned block: 1.98 per centerline range on average and at most 3 on
     the fixtures; point locators are degenerate ranges and span one.
-    Exposed so callers running many geocode configurations over the same
-    locators build (and persist) it ONCE — in production this is a
-    materialized table, not a per-query groupBy."""
-    from ..caching import model_memo, persist_tracked
 
+    Built and persisted ONCE per (locator set, session) — in production
+    this is a materialized table, not a per-query groupBy — and collected
+    once into the LocatorIndex the match kernel probes (locator_index).
+    A call with the very locator DataFrames of an earlier call returns its
+    pack without re-deriving the locator plan; other calls fall back to
+    comparing plans (DataFrame.sameSemantics)."""
+    from ..caching import memo_lookup, model_memo, persist_tracked
+
+    key = ("locator_pack", locators, pobox)
+    sources = (address_points, road_centerlines, pobox_points)
+    pack = memo_lookup(key, sources)
+    if pack is not None:
+        return pack
     loc = unified_locators(
         address_points, road_centerlines, pobox_points,
         locators=locators, pobox=pobox,
     )
 
     def build():
-        # one grouped+persisted pack per (locator set, session) — the
-        # materialized-table production shape the docstring names; every
-        # geocode configuration's broadcast then reads the cached
-        # relation instead of re-running the locator groupBy (~1 s per
-        # invocation at sf1.0 scale). A reversed or NULL range holds no
-        # house; it is dropped before the explode, where sequence() would
-        # count a reversed range downwards.
+        # A reversed or NULL range holds no house; it is dropped before
+        # the explode, where sequence() would count a reversed range
+        # downwards.
         blocks = loc.filter(F.col("from_addr") <= F.col("to_addr")).withColumn(
             "block",
             F.explode(F.sequence(F.expr(f"from_addr div {BLOCK}"),
@@ -383,7 +262,81 @@ def pack_locators(
             )
         )
 
-    return model_memo(("locator_pack", locators, pobox), loc, build)
+    return model_memo(key, loc, build, sources=sources)
+
+
+def locator_index(pack: DataFrame) -> IndexFile:
+    """The pack as a LocatorIndex, published to the workers as one file:
+    collected, built and shipped once per pack (memoized with it, dropped
+    by caching.clear_caches)."""
+    from ..caching import model_memo
+
+    def build():
+        index = LocatorIndex.from_pack(pack.toArrow())
+        return IndexFile.publish(index, pack.sparkSession.sparkContext)
+
+    return model_memo(("locator_index", id(pack)), pack, build)
+
+
+def _index_for(packed, address_points, road_centerlines, pobox_points,
+               locators, pobox) -> IndexFile:
+    if packed is None:
+        packed = pack_locators(address_points, road_centerlines,
+                               pobox_points, locators=locators, pobox=pobox)
+    return locator_index(packed)
+
+
+def _in_reference(result: DataFrame, spatial_reference: int) -> DataFrame:
+    if spatial_reference == 26912:
+        return result
+    from .projection import reproject_result
+
+    return reproject_result(result, wkid=spatial_reference)
+
+
+# --------------------------------------------------------------- the operator
+def geocode(
+    input_df: DataFrame,
+    address_points: DataFrame | None = None,
+    road_centerlines: DataFrame | None = None,
+    pobox_points: DataFrame | None = None,
+    locators: str = "all",
+    pobox: bool = False,
+    accept_score: int = DEFAULT_ACCEPT_SCORE,
+    spatial_reference: int = 26912,
+    packed: DataFrame | None = None,
+) -> DataFrame:
+    """Full geocode: (id, street, zone) rows -> the 11-column result contract.
+
+    One Arrow stage cleanses (the pd_cleanse_* twins), parses, applies the
+    F5 street-length guard and matches. For custom schemas, stage
+    parse_input(cleanse_input(df, ...)) and call geocode_parsed. `locators`
+    in {'all','addressPoints','roadCenterlines'} (reference
+    geocode.py:26,128). `spatial_reference` re-expresses output x/y (J7,
+    geocode.py:25,115,204): 26912 native or 4326 via the from-scratch
+    transverse-Mercator inverse. Pass `packed` (a pack_locators result) to
+    reuse one prebuilt pack; locators/pobox are ignored then.
+    """
+    from ..extraction import cleanse_parse_batch
+
+    index = _index_for(packed, address_points, road_centerlines,
+                       pobox_points, locators, pobox)
+
+    # the UDF pickles this closure, and a worker imports the modules of
+    # the names it uses: extraction and match, not this module
+    def kernel(street: pd.Series, zone: pd.Series) -> pd.DataFrame:
+        return match(cleanse_parse_batch(street, zone), index.load(),
+                     accept_score)
+
+    street = F.col("street").cast("string")
+    zone = F.col("zone").cast("string")
+    result = input_df.select(
+        F.col("id").cast("string").alias("primary_key"),
+        street.alias("input_street"),
+        zone.alias("input_zone"),
+        F.pandas_udf(kernel, MATCH_TYPE)(street, zone).alias("_m"),
+    ).select("primary_key", "input_street", "input_zone", "_m.*")
+    return _in_reference(result, spatial_reference)
 
 
 def geocode_parsed(
@@ -397,149 +350,39 @@ def geocode_parsed(
     spatial_reference: int = 26912,
     packed: DataFrame | None = None,
 ) -> DataFrame:
-    """geocode() over an already cleansed + parsed relation.
+    """geocode() over an already cleansed + parsed relation: match only.
 
     `base` needs primary_key, input_street, input_zone, cleansed_street,
     cleansed_zone, zone_key and the six parse fields — the schema
-    parse_input(cleanse_input(df)) produces. Exposed so sources that parse
-    inside their own Arrow stage (extraction.extract_and_parse fuses
-    extract+cleanse+parse into one Python round trip) skip re-parsing.
-    Pass `packed` (a pack_locators result) to reuse one prebuilt broadcast
-    relation across configurations; locators/pobox are ignored then.
+    parse_input(cleanse_input(df)) and extraction.extract_and_parse
+    produce — and optionally the F5 `error` column. Pass `packed` (a
+    pack_locators result) to reuse one prebuilt pack; locators/pobox are
+    ignored then.
     """
-    if packed is None:
-        packed = pack_locators(
-            address_points, road_centerlines, pobox_points,
-            locators=locators, pobox=pobox,
-        )
-
-    if "error" not in base.columns:  # custom callers without the F5 column
-        base = base.withColumn("error", F.lit(None).cast("string"))
-
-    base = probe_keys(base)
-    j = base.join(
-        F.broadcast(packed),
-        on=[base[k] == packed[k] for k in PACK_KEY],
-        how="left",
-    ).drop(*[packed[k] for k in PACK_KEY])
-
-    house = F.col("house")
-
-    def _score(c):
-        # J4: deterministic penalty scoring against one candidate struct.
-        return (
-            c["base_score"]
-            - _dir_penalty(F.col("predir"), c["l_predir"])
-            - _dir_penalty(F.col("sufdir"), c["l_sufdir"])
-            - _type_penalty(F.col("stype"), c["l_stype"])
-        ).cast("bigint")
-
-    def _in_range(c):
-        return (house >= c["from_addr"]) & (house <= c["to_addr"])
-
-    # J5 row-locally: ONE aggregate fold over the candidate array keeps
-    # the best (rank_key asc-unique total order: score desc, priority,
-    # cand_id) candidate that is in range and clears the accept score.
-    # HOF lambdas are interpreted per element, so the previous
-    # filter -> transform(14-field struct) -> array_max(struct compare)
-    # chain allocated a full struct per eligible candidate and compared
-    # structs pairwise; the fold carries (key, candidate-ref) and builds
-    # a struct only when a candidate improves on the running best —
-    # winner identical (ranks unique), measured ~2x less matcher time.
-    cand_type = j.schema["cands"].dataType.elementType
-    init = F.struct(
-        F.lit(-1).cast("bigint").alias("k"),
-        F.lit(None).cast(cand_type).alias("c"),
+    index = _index_for(packed, address_points, road_centerlines,
+                       pobox_points, locators, pobox)
+    error = (F.col("error") if "error" in base.columns
+             else F.lit(None).cast("string"))
+    house = F.col("house").cast("bigint")
+    # house travels NULL-free next to its NULL flag: a nullable integer
+    # column would reach pandas as float64
+    rows = F.struct(
+        "cleansed_street", "cleansed_zone", "zone_key", "addr_type",
+        F.coalesce(house, F.lit(0)).alias("house"),
+        house.isNull().alias("house_null"),
+        "predir", "street_name", "stype", "sufdir", error.alias("error"),
     )
 
-    def _fold(acc, c):
-        sc = _score(c)
-        k = _rank_key(sc, c["pri"], c["cand_id"])
-        better = _in_range(c) & (sc >= accept_score) & (k > acc["k"])
-        return F.when(
-            better, F.struct(k.alias("k"), c.alias("c"))
-        ).otherwise(acc)
+    def kernel(rows: pd.DataFrame) -> pd.DataFrame:
+        rows["house"] = rows["house"].astype("Int64").mask(
+            rows.pop("house_null"))
+        return match(rows, index.load(), accept_score)
 
-    # F5 precedence: a captured per-row error forces the unmatched error-row
-    # shape (x=0/y=0/score=0, message=error) even if a candidate would match
-    # — the reference's exception capture fires before any match is written.
-    j = j.withColumn(
-        "best",
-        F.when(F.col("error").isNull(), F.aggregate(F.col("cands"), init, _fold)),
-    ).drop("cands")
-
-    m = F.col("best")["c"]
-    # the winner's score is the leading digits of its rank key: every
-    # score is >= 25 and the tiebreak part is < 10^9 (_rank_key), so
-    # integer division recovers it exactly without a second _score tree
-    m_score = F.expr("best.k div 1000000000")
-    # Position along the winning segment; exact matchers are degenerate
-    # segments (from=to -> t=0 -> x0 bit-exact).
-    t = F.when(
-        m["to_addr"] > m["from_addr"],
-        (house - m["from_addr"]).cast("double")
-        / (m["to_addr"] - m["from_addr"]).cast("double"),
-    ).otherwise(F.lit(0.0))
-
-    locator_name = (
-        F.when(m["src"] == "usps", F.lit(LOCATOR_USPS))
-        .when(m["src"] == "ap", F.lit(LOCATOR_AP))
-        .otherwise(F.lit(LOCATOR_RC))
-    )
-    match_addr = F.when(
-        m["src"] == "usps",
-        F.concat(
-            F.lit("P.O. BOX "), house.cast("string"),
-            F.lit(", "), F.col("zone_key"),
-        ),
-    ).otherwise(
-        _match_address(
-            house, m["l_predir"], m["l_street_name"], m["l_stype"],
-            m["l_sufdir"], m["grid"],
-        )
-    )
-    std_addr = F.when(
-        m["src"] == "usps",
-        F.lower(F.concat(F.lit("po box "), house.cast("string"))),
-    ).otherwise(
-        _standardized(house, F.col("predir"), F.col("street_name"),
-                      F.col("stype"), F.col("sufdir"))
-    )
-
-    matched = m.isNotNull()
-    missing = (F.col("cleansed_street") == "") | (F.col("cleansed_zone") == "")
-    msg_missing = F.concat(
-        F.lit(f"Missing required parameters for URL: https://{HOST}/api/v1/geocode/"),
-        F.col("cleansed_street"), F.lit("/"), F.col("cleansed_zone"),
-    )
-    msg_404 = F.lit(MSG_NO_CANDIDATES.format(score=accept_score))
-
-    result = j.select(
-        F.col("primary_key"),
-        F.col("input_street"),
-        F.col("input_zone"),
-        F.when(matched, m["x0"] + t * (m["x1"] - m["x0"]))
-        .otherwise(F.lit(0.0)).alias("x"),
-        F.when(matched, m["y0"] + t * (m["y1"] - m["y0"]))
-        .otherwise(F.lit(0.0)).alias("y"),
-        F.when(matched, m_score).otherwise(F.lit(0).cast("bigint"))
-        .alias("score"),
-        F.when(matched, locator_name).alias("locator"),
-        F.when(matched, match_addr).alias("matchAddress"),
-        # P6: prefer standardizedAddress, fall back to inputAddress
-        # (reference geocode.py:234-237) — ours always sets it on success.
-        F.when(matched, std_addr).alias("standardizedAddress"),
-        F.when(matched, m["grid"]).alias("addressGrid"),
-        F.when(~matched,
-               F.coalesce(F.col("error"),
-                          F.when(missing, msg_missing).otherwise(msg_404)))
-        .alias("message"),
-    )
-    if spatial_reference != 26912:
-        from .projection import reproject_result
-
-        result = reproject_result(result, wkid=spatial_reference)
-    return result
+    result = base.select(
+        "primary_key", "input_street", "input_zone",
+        F.pandas_udf(kernel, MATCH_TYPE)(rows).alias("_m"),
+    ).select("primary_key", "input_street", "input_zone", "_m.*")
+    return _in_reference(result, spatial_reference)
 
 
 def metrics_rollup(result: DataFrame) -> DataFrame:

@@ -56,9 +56,11 @@ def _rank_key_sql(score: str, priority: int, cand_id: str) -> str:
 
 def _match_address_sql(house: str, predir: str, name: str, stype: str,
                        sufdir: str, grid: str) -> str:
+    # `||`, not concat(): DuckDB's concat() skips a NULL argument, while the
+    # engine's matchAddress is NULL when the locator's grid is NULL
     return (
-        f"concat(concat_ws(' ', CAST({house} AS VARCHAR), nullif({predir}, ''),"
-        f" {name}, nullif({stype}, ''), nullif({sufdir}, '')), ', ', {grid})"
+        f"(concat_ws(' ', CAST({house} AS VARCHAR), nullif({predir}, ''),"
+        f" {name}, nullif({stype}, ''), nullif({sufdir}, '')) || ', ' || {grid})"
     )
 
 

@@ -1,24 +1,33 @@
 """Pipeline assembly: pages -> extract -> geocode (SURVEY §3.4 lifecycle).
 
 spark.read (Parquet/Iceberg scan, column-pruned to url+text)
-  -> extract_and_parse (ONE Arrow-vectorized stage: extract+cleanse+parse)
-  -> broadcast join against per-key candidate arrays (one row per page)
-  -> row-local best-candidate selection (higher-order array functions)
+  -> ONE Arrow-vectorized stage per batch: extract + cleanse + parse
+     (extraction._extract_parse_batch), then the match against the
+     session's shared locator index (operators.match.match)
   -> 11-column contract
 
-No shuffle of the input/probe side: every page is processed independently, so
-the plan scales with executors and no key skew can concentrate load. The only
-exchanges live under the locator-side BroadcastExchange (the small relation is
-aggregated into per-key candidate arrays before broadcast), matching what
-.explain shows.
+No join and no shuffle: every page is processed independently, so the plan
+scales with executors and no key skew can concentrate load. The locator
+pack is grouped, collected and shipped to the workers once per locator set
+(operators.geocode.locator_index), not once per query, matching what
+.explain shows: one ArrowEvalPython over the page scan.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
-from ..extraction import extract_and_parse
-from ..operators.geocode import geocode_parsed
+from ..extraction import _extract_parse_batch
+from ..operators.geocode import locator_index, pack_locators
+from ..operators.match import MATCH_FIELDS, match
+
+_PAGES_TYPE = StructType(
+    [StructField("input_street", StringType()),
+     StructField("input_zone", StringType())] + MATCH_FIELDS
+)
 
 
 def load_locators(spark: SparkSession, fixtures_dir: str) -> dict:
@@ -55,14 +64,32 @@ def geocode_pages(
 
     One output row per page (reference row-accounting, geocode.py:171-250);
     pages with no extractable address surface the F4 'Missing required
-    parameters' failure (geocode.py:210-215). Extraction, cleansing and
-    grammar parsing run fused in ONE Arrow stage (extract_and_parse).
+    parameters' failure (geocode.py:210-215). Extraction, cleansing,
+    grammar parsing and the match run fused in ONE Arrow stage, equal row
+    for row to geocode_parsed(extract_and_parse(pages)).
     progress_acc: optional row-count accumulator for A4 progress reporting
     (see extraction.extract_and_parse / progress.ProgressReporter)."""
-    return geocode_parsed(
-        extract_and_parse(pages, progress_acc=progress_acc),
-        locators=locators,
-        pobox=pobox,
-        accept_score=accept_score,
-        **locator_tables,
-    )
+    index = locator_index(pack_locators(**locator_tables, locators=locators,
+                                        pobox=pobox))
+
+    # one Arrow batch of page texts -> input_street, input_zone and the 8
+    # match columns; a worker imports extraction and match to run it
+    def kernel(text: pd.Series) -> pd.DataFrame:
+        parsed = _extract_parse_batch(text)
+        return pd.concat(
+            [parsed[["street", "zone"]].set_axis(
+                ["input_street", "input_zone"], axis=1),
+             match(parsed, index.load(), accept_score)],
+            axis=1,
+        )
+
+    if progress_acc is not None:
+        from ..progress import counting_pandas_udf
+
+        udf = counting_pandas_udf(kernel, _PAGES_TYPE, progress_acc)
+    else:
+        udf = F.pandas_udf(kernel, _PAGES_TYPE)
+    return pages.select(
+        F.col("url").cast("string").alias("primary_key"),
+        udf(F.col("text")).alias("a"),
+    ).select("primary_key", "a.*")

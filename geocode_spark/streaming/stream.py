@@ -65,8 +65,10 @@ def stream_geocode(
 ):
     """Incrementally geocode a growing pages directory.
 
-    Each micro-batch runs the full batch plan (broadcast locator join +
-    top-1) over only the newly-arrived files and appends the 11-column
+    Each micro-batch runs the full batch plan (one Arrow stage: extract,
+    parse and match against the session's shared locator index, built once
+    per locator set, not per batch) over only the newly-arrived files and
+    appends the 11-column
     contract to `out_dir`. Correctness needs no cross-batch state: a page's
     url appears in exactly one file, so per-batch top-1 is global top-1.
     Restarting with the same checkpoint resumes after the last committed

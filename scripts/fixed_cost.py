@@ -1,0 +1,128 @@
+#!/usr/bin/env python3
+"""Fixed cost per geocode query, in CPU seconds, under the benchmark's
+session settings.
+
+    python3 scripts/fixed_cost.py [--seed 1] [--reps 7] [--work DIR]
+
+Starts one Spark session the way ``perfbench/run.py`` does (its
+``_prepare_env`` and ``_start_session``: ``local[N]``, the quick-compiler
+JVM, the 2 GB pre-touched heap), generates the benchmark's seeded inputs
+(``perfbench/inputs.py``, full size) into the work directory, builds the
+locator pack, and stages the 5,000 pages through ``extract_and_parse``.
+It then times, after one unmeasured warm-up each, ``--reps`` repetitions
+of:
+
+``plan_build``      building the ``geocode_pages`` DataFrame
+``executed_plan``   building it and planning it (``executedPlan()``)
+``write_20``        a ``geocode_parsed`` write of 20 staged parsed rows
+``write_5000``      a ``geocode_parsed`` write of all 5,000 staged rows
+
+and prints one JSON line: per step, the median and the quartiles of the
+CPU seconds of the Spark JVM and its Python workers (``procmem.tree_cpu_s``,
+the benchmark's CPU measure), the median CPU seconds of this driver process
+(plan construction in Python runs there) and the median wall seconds.
+The difference ``write_5000 - write_20`` is the per-row cost; ``write_20``
+is almost all fixed cost.
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import shutil
+import statistics
+import sys
+import tempfile
+import time
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PERFBENCH = ROOT / "perfbench"
+sys.path[:0] = [str(ROOT), str(PERFBENCH)]
+
+import inputs  # noqa: E402  (perfbench/inputs.py)
+import run as perfrun  # noqa: E402  (perfbench/run.py)
+from procmem import tree_cpu_s  # noqa: E402
+
+GEOCODE_KW = {"locators": "all", "pobox": True}
+
+
+def _quartiles(xs: list[float]) -> list[float]:
+    q = statistics.quantiles(xs, n=4, method="inclusive")
+    return [q[0], q[2]]
+
+
+def _measure(step, reps: int) -> dict:
+    step()  # warm-up: lazy set-up and JIT compilation are not fixed cost
+    tree, driver, wall = [], [], []
+    for _ in range(reps):
+        t0, c0, d0 = time.perf_counter(), tree_cpu_s(), time.process_time()
+        step()
+        wall.append(time.perf_counter() - t0)
+        tree.append(tree_cpu_s() - c0)
+        driver.append(time.process_time() - d0)
+    return {"cpu_s": statistics.median(tree), "cpu_s_iqr": _quartiles(tree),
+            "driver_cpu_s": statistics.median(driver),
+            "wall_s": statistics.median(wall)}
+
+
+def main(argv=None) -> int:
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("--seed", type=int, default=1)
+    p.add_argument("--reps", type=int, default=7)
+    p.add_argument("--work", help="scratch directory (default: a new "
+                                  "temporary directory, removed at exit)")
+    args = p.parse_args(argv)
+
+    work = Path(args.work or tempfile.mkdtemp(prefix="fixed-cost-"))
+    shutil.rmtree(work / "tmp", ignore_errors=True)
+    perfrun._prepare_env(work)
+    fix = inputs.ensure_inputs(work / "inputs", args.seed, "full",
+                               perfrun.SIZES["full"], 2 * perfrun._cpus())
+    spark = perfrun._start_session(work)
+    try:
+        from geocode_spark.extraction import extract_and_parse
+        from geocode_spark.operators.geocode import (
+            geocode_parsed,
+            pack_locators,
+        )
+        from geocode_spark.plans.pipeline import geocode_pages, load_locators
+
+        locs = load_locators(spark, str(fix))
+        pack_locators(**locs, **GEOCODE_KW).count()
+        pages = spark.read.parquet(str(fix / "pages"))
+        staged = str(work / "staged")
+        extract_and_parse(pages).write.mode("overwrite").parquet(staged)
+        parsed = spark.read.parquet(staged)
+        few = parsed.orderBy("primary_key").limit(20)
+        few.write.mode("overwrite").parquet(staged + "-20")
+        few = spark.read.parquet(staged + "-20")
+        out = str(work / "out")
+
+        def plan_build():
+            geocode_pages(pages, locs, **GEOCODE_KW)
+
+        def executed_plan():
+            geocode_pages(pages, locs, **GEOCODE_KW)._jdf \
+                .queryExecution().executedPlan()
+
+        def write(rows):
+            return lambda: geocode_parsed(rows, **locs, **GEOCODE_KW) \
+                .write.mode("overwrite").parquet(out)
+
+        steps = {"plan_build": plan_build, "executed_plan": executed_plan,
+                 "write_20": write(few), "write_5000": write(parsed)}
+        result = {name: _measure(step, args.reps)
+                  for name, step in steps.items()}
+    finally:
+        perfrun._stop_session(spark)
+        if not args.work:
+            shutil.rmtree(work, ignore_errors=True)
+    print(json.dumps({"seed": args.seed, "reps": args.reps,
+                      "cpus": perfrun._cpus(), **result}))
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

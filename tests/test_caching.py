@@ -74,3 +74,50 @@ def test_radius_join_persists_once_per_input(spark):
     assert n1 - n0 == 1
     assert len(caching._TRACKED) == n1
     assert first == second and first  # effect size: pairs exist
+
+
+def test_pack_locators_hit_skips_locator_plan(spark, fixtures_dir,
+                                              monkeypatch):
+    """A second pack_locators call with the same locator DataFrames returns
+    the memoized pack without re-deriving unified_locators."""
+    import geocode_spark.operators.geocode as g
+    from geocode_spark.plans.pipeline import load_locators
+
+    calls = []
+    orig = g.unified_locators
+
+    def counting(*args, **kw):
+        calls.append(1)
+        return orig(*args, **kw)
+
+    monkeypatch.setattr(g, "unified_locators", counting)
+    locs = load_locators(spark, fixtures_dir)
+    first = g.pack_locators(**locs, pobox=True)
+    second = g.pack_locators(**locs, pobox=True)
+    assert second is first
+    assert len(calls) == 1
+    # other locator objects of the same plan: the plan comparison still hits
+    third = g.pack_locators(**load_locators(spark, fixtures_dir), pobox=True)
+    assert third is first and len(calls) == 2
+
+
+def test_clear_caches_builds_fresh_index(spark, fixtures_dir):
+    """After clear_caches() the next geocode builds and publishes a new
+    locator index; results are unchanged."""
+    from geocode_spark.caching import clear_caches
+    from geocode_spark.operators.geocode import (
+        geocode,
+        locator_index,
+        pack_locators,
+    )
+    from geocode_spark.plans.pipeline import load_locators
+
+    locs = load_locators(spark, fixtures_dir)
+    addr = spark.read.parquet(f"{fixtures_dir}/addresses.parquet")
+    before = locator_index(pack_locators(**locs, pobox=True))
+    rows = sorted(geocode(addr, pobox=True, **locs).collect())
+    assert locator_index(pack_locators(**locs, pobox=True)) is before
+    clear_caches()
+    after = locator_index(pack_locators(**locs, pobox=True))
+    assert after is not before and after.name != before.name
+    assert sorted(geocode(addr, pobox=True, **locs).collect()) == rows

@@ -88,3 +88,41 @@ def test_invalid_image_container_is_error_row(spark, fixtures_dir):
     assert out["u1"]["format"] == "FIMG" and out["u1"]["error"] is None
     assert out["u2"]["format"] is None
     assert out["u2"]["error"] == "invalid image container: 2 bytes"
+
+
+def test_match_poison_row_becomes_error_row(spark, fixtures_dir, monkeypatch):
+    """A row the match step throws on becomes an error row carrying
+    str(ex)[:500]; every other row of the batch keeps its match."""
+    import geocode_spark.operators.match as m
+    from geocode_spark.extraction import cleanse_parse_batch
+    from geocode_spark.operators.geocode import locator_index, pack_locators
+    from geocode_spark.plans.pipeline import load_locators
+
+    index = locator_index(
+        pack_locators(**load_locators(spark, fixtures_dir), pobox=True)
+    ).load()
+    addr = spark.read.parquet(f"{fixtures_dir}/addresses.parquet").toPandas()
+    parsed = cleanse_parse_batch(addr["street"], addr["zone"])
+    parsed["zone_key"] = parsed["cleansed_zone"].str.upper()
+    clean = m.match(parsed, index, 70)
+
+    boom = "poisoned direction " * 40
+    orig = m._expand
+
+    def poisoned(d):
+        if d == "E":
+            raise RuntimeError(boom)
+        return orig(d)
+
+    monkeypatch.setattr(m, "_expand", poisoned)
+    out = m.match(parsed, index, 70)
+    hit = (clean["message"].isna() & (clean["locator"] != m.LOCATOR_USPS)
+           & ((parsed["predir"] == "E") | (parsed["sufdir"] == "E"))).to_numpy()
+    assert 0 < hit.sum() < len(parsed)  # effect size: some rows, not all
+    bad = out[hit]
+    assert (bad["message"] == str(RuntimeError(boom))[:MSG_TRUNCATE]).all()
+    assert (bad["x"] == 0.0).all() and (bad["score"] == 0).all()
+    assert bad["locator"].isna().all()
+    pd.testing.assert_frame_equal(
+        out[~hit].reset_index(drop=True), clean[~hit].reset_index(drop=True),
+        check_dtype=False)

@@ -4,6 +4,11 @@ Mirrors the reference's mocked end-to-end strategy (tests/test_geocode.py:104-17
 but with a real (synthetic) locator instead of a mocked HTTP API, plus exact
 row-for-row comparison keyed on primary_key."""
 
+import os
+import subprocess
+import sys
+
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -104,6 +109,50 @@ def test_metrics(result):
     assert m.average_score >= 70
 
 
-def test_broadcast_join_in_plan(result):
+def test_one_arrow_stage_no_join_in_plan(result):
+    """The match runs inside the cleanse+parse Arrow stage against the
+    shared locator index: one ArrowEvalPython, no join, no exchange."""
     plan = result._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+    assert plan.count("ArrowEvalPython") == 1
+    assert "Join" not in plan and "Exchange" not in plan
+
+
+_PARITY_PROBE = r"""
+import sys
+sys.path[:0] = [%(repo)r]
+from geocode_spark.operators.geocode import geocode
+from geocode_spark.plans.pipeline import geocode_pages, load_locators
+from geocode_spark.session import get_spark
+
+spark = get_spark("geocode-parity", parallelism=%(n)d,
+                  shuffle_partitions=%(n)d, small_input=True)
+fix = %(fix)r
+locs = load_locators(spark, fix)
+geocode_pages(spark.read.parquet(fix + "/pages.parquet"), locs).write.parquet(
+    %(out)r + "/pages")
+geocode(spark.read.parquet(fix + "/addresses.parquet"), pobox=True,
+        spatial_reference=4326, **locs).write.parquet(%(out)r + "/addresses")
+spark.stop()
+"""
+
+
+def test_local1_equals_local4(fixtures_dir, tmp_path):
+    """The page and address pipelines give identical rows on one task slot
+    and on four (each in its own JVM: one SparkContext per process)."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    outs = {}
+    for n in (1, 4):
+        out = str(tmp_path / f"local{n}")
+        proc = subprocess.run(
+            [sys.executable, "-c", _PARITY_PROBE % {
+                "repo": repo, "n": n, "fix": fixtures_dir, "out": out}],
+            capture_output=True, text=True, timeout=600,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        outs[n] = out
+    for name in ("pages", "addresses"):
+        one, four = (pd.read_parquet(f"{outs[n]}/{name}")
+                     .sort_values("primary_key", ignore_index=True)
+                     for n in (1, 4))
+        assert len(one) > 0
+        pd.testing.assert_frame_equal(one, four)

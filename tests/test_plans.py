@@ -4,7 +4,7 @@ must stay true as code evolves.
 These assert on executed-plan strings (cheap — no job runs), pinning:
  - exchange counts for the temporal window family (exactly one) and
    stratified sampling (zero);
- - the geocode hot path never degrades to a sort-merge join;
+ - the geocode hot path is one Arrow stage with no join and no exchange;
  - the unfused extraction kernel is planned exactly once;
  - no row-at-a-time Python UDF (BatchEvalPython) sneaks onto any query
    plan — Arrow stages (ArrowEvalPython / mapInPandas / cogroup) only.
@@ -66,31 +66,30 @@ def test_embedding_validate_zero_shuffle(spark):
     assert _n_exchanges(_plan(embedding_validate(validation_corpus(emb)))) == 0
 
 
+_JOIN = re.compile(r"HashJoin|MergeJoin|NestedLoopJoin|CartesianProduct")
+
+
+def _assert_one_kernel_no_join(plan: str) -> None:
+    """The geocode plan shape: one Arrow stage (parse and match in the
+    same Python round trip), no join and no exchange of any kind."""
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert not _JOIN.search(plan), plan
+    assert "Exchange" not in plan, plan
+
+
 def test_geocode_pages_no_sort_merge_join(spark, fixtures_dir):
+    """The page pipeline matches inside its Arrow stage against the shared
+    locator index: no join at all (so no sort-merge join and no broadcast
+    rebuilt per query), and the stage reads the page scan directly."""
     from geocode_spark.plans.pipeline import geocode_pages, load_locators
 
     pages = spark.read.parquet(f"{fixtures_dir}/pages.parquet")
     plan = _plan(geocode_pages(pages, load_locators(spark, fixtures_dir)))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    # probe side shuffle-free: the only hash exchange builds the locator
-    # pack, which lives under the BroadcastExchange (over the session-
-    # memoized persisted relation). Once that cache is materialized by an
-    # earlier geocode run, InMemoryRelation's string rendering repeats the
-    # cached build plan (both the substituted fragment and the original),
-    # so a raw count over the whole string double-counts an exchange that
-    # executes zero times — guard the probe side (the join's left child,
-    # rendered before the build side) instead.
-    probe_side, build_side = plan.split("BroadcastExchange", 1)
-    assert "pages.parquet" in probe_side  # the prefix holds the page scan
-    assert _n_exchanges(probe_side) == 0
-    assert "InMemoryTableScan" in build_side  # the pack is the cached relation
-    # both sides join on the full pack key, the house block included
-    (join,) = [ln for ln in plan.splitlines() if "BroadcastHashJoin" in ln]
-    sides = re.match(r".*BroadcastHashJoin \[(.*?)\], \[(.*?)\]", join)
-    for keys in sides.groups():
-        names = [k.split("#")[0] for k in keys.split(", ")]
-        assert names == ["zone_key", "join_name", "block"], join
+    _assert_one_kernel_no_join(plan)
+    lines = plan.splitlines()
+    kernel = next(i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln)
+    assert "FileScan" in lines[-1] and "pages.parquet" in lines[-1]
+    assert kernel < len(lines) - 1
 
 
 def test_extract_addresses_single_arrow_stage(spark):
@@ -106,7 +105,8 @@ def _batch_filter_lines(plan: str) -> list:
     """Indexes of the plan lines that are a Filter on the batch key hash."""
     return [
         i for i, line in enumerate(plan.splitlines())
-        if line.lstrip(" :+-").startswith("Filter") and "xxhash64" in line
+        if re.sub(r"^[ :+-]*(\*\(\d+\) )?", "", line).startswith("Filter")
+        and "xxhash64" in line
     ]
 
 
@@ -114,9 +114,10 @@ def _batch_filter_lines(plan: str) -> list:
 def test_resume_plan_filters_batch_key_below_kernel(spark, fixtures_dir, shape):
     """A resume processes only its pending batches: the batch-key filter is
     pushed below the single Arrow kernel, next to the source scan, for page
-    input (fused extract+parse) and address rows (parse) alike. Exactly one
-    ArrowEvalPython also guards against the deterministic kernels being
-    evaluated twice. With every batch pending there is no batch filter."""
+    input (fused extract+parse+match) and address rows (cleanse+parse+
+    match) alike. Exactly one ArrowEvalPython also guards against the
+    deterministic kernels being evaluated twice; there is no join and no
+    exchange. With every batch pending there is no batch filter."""
     from geocode_spark.batching import _pending_plan
     from geocode_spark.operators.geocode import geocode
     from geocode_spark.plans.pipeline import geocode_pages, load_locators
@@ -135,15 +136,15 @@ def test_resume_plan_filters_batch_key_below_kernel(spark, fixtures_dir, shape):
     assert _batch_filter_lines(full) == []
 
     resume = _plan(_pending_plan(result, 4, [2], "primary_key"))
-    assert resume.count("ArrowEvalPython") == 1
+    _assert_one_kernel_no_join(resume)
     lines = resume.splitlines()
     kernel = next(i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln)
-    build = next(i for i, ln in enumerate(lines) if "BroadcastExchange" in ln)
     (filt,) = _batch_filter_lines(resume)
-    # rendered after the kernel and before the build side = in the subtree
-    # under the kernel, on the probe side
-    assert kernel < filt < build
-    assert "FileScan" in lines[filt + 1] and source in lines[filt + 1]
+    # rendered after the kernel = in the subtree under it, directly on
+    # the source scan (past the columnar-to-row adapter)
+    assert kernel < filt
+    scan = [ln for ln in lines[filt + 1:] if "ColumnarToRow" not in ln][0]
+    assert "FileScan" in scan and source in scan
 
 
 def test_no_row_at_a_time_python_udf_anywhere(spark):
