@@ -46,30 +46,36 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # --------------------------------------------------------------------- queries
+def _staged_addresses(spark, sf_dir):
+    """The addresses fixture through the engine's cleanse/parse stage."""
+    from geocode_spark.operators.geocode import cleanse_input, parse_input
+
+    fix = _fix(sf_dir)
+    return parse_input(cleanse_input(
+        spark.read.parquet(f"{fix}/addresses.parquet")))
+
+
 def _q_cleanse(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from geocode_spark.cleansing import cleanse_street_col, cleanse_zone_col
-
-    fix = _fix(sf_dir)
-    df = spark.read.parquet(f"{fix}/addresses.parquet")
-    return df.select(
-        F.col("id").alias("id"),
-        cleanse_street_col(F.col("street")).alias("cleansed_street"),
-        cleanse_zone_col(F.col("zone")).alias("cleansed_zone"),
+    # the stage cleanses a missing street or zone to ''; the cleanse
+    # contract (and its oracle) keeps it NULL
+    return _staged_addresses(spark, sf_dir).select(
+        F.col("primary_key").alias("id"),
+        F.when(F.col("input_street").isNotNull(),
+               F.col("cleansed_street")).alias("cleansed_street"),
+        F.when(F.col("input_zone").isNotNull(),
+               F.col("cleansed_zone")).alias("cleansed_zone"),
     )
 
 
 def _q_parse(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from geocode_spark.cleansing import cleanse_street_col
-    from geocode_spark.grammar import PARSE_FIELDS, parse_street_cols
+    from geocode_spark.grammar import PARSE_FIELDS
 
-    fix = _fix(sf_dir)
-    df = spark.read.parquet(f"{fix}/addresses.parquet")
-    cols = parse_street_cols(cleanse_street_col(F.col("street")))
-    return df.select(F.col("id"), *[cols[f].alias(f) for f in PARSE_FIELDS])
+    return _staged_addresses(spark, sf_dir).select(
+        F.col("primary_key").alias("id"), *PARSE_FIELDS)
 
 
 def _geo(spark, sf_dir, **kw):

@@ -12,9 +12,10 @@ geocoding toolbox (reference: /root/reference, ~700 LoC per-row HTTP client,
 - flow control: health probe, batch ledger      (plans/ ~ geocode.py:37,190-191,168-174)
 - 11-column result contract                     (geocode.py:33-36)
 
-Everything is DataFrame-first: Catalyst column expressions on the hot path,
-Arrow-vectorized pandas UDFs where regex/Python semantics are mandated, no
-row-at-a-time Python, no RDDs.
+Everything is DataFrame-first: the geocode hot path is one Arrow-vectorized
+pandas UDF stage (extraction, the one cleanse/parse kernel and the match, in
+one Python round trip per batch), Catalyst column expressions elsewhere, no
+row-at-a-time Python UDF, no RDDs.
 """
 
 __version__ = "0.2.0"

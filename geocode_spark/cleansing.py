@@ -14,12 +14,13 @@ _cleanse_zone (geocode.py:53-62):
   3. iff result non-empty and starts with '8': first 5 chars (geocode.py:59-61)
      (NO '&'->'and' on the zone path — pinned by tests/test_geocode.py:33)
 
-Three implementations, all asserted equal in tests/test_cleansing.py:
+Two reference forms and one engine kernel, all asserted equal in
+tests/test_cleansing.py and tests/test_fuzz_parity.py:
   * py_*        — pure-Python oracle (re-derived from the spec above)
-  * *_col       — native Catalyst column expressions (JVM hot path; Java regex
-                  and Python re agree on the ASCII classes used here)
+  * *_sql       — DuckDB SQL text (RE2), used by the oracle queries
   * pd_*        — Arrow-vectorized pandas twins (pd.Series.str ops, Python `re`
-                  engine), run inside extraction's fused kernel
+                  engine): the engine's only cleansing, run inside
+                  extraction's cleanse/parse kernel (extraction._cleanse_parse)
 """
 
 from __future__ import annotations
@@ -27,8 +28,6 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 _SPACES = re.compile(" +")
 _ALLOWABLE = re.compile("[^a-zA-Z0-9]")
@@ -50,30 +49,10 @@ def py_cleanse_zone(data) -> str:
     return zone
 
 
-# ------------------------------------------------------- catalyst expressions
-def cleanse_street_col(col: Column) -> Column:
-    """Native-JVM cleansing; stays inside WholeStageCodegen."""
-    c = F.replace(col, F.lit("&"), F.lit("and"))
-    c = F.regexp_replace(c, "[^a-zA-Z0-9]", " ")
-    c = F.regexp_replace(c, " +", " ")
-    return F.trim(c)
-
-
-def cleanse_zone_col(col: Column) -> Column:
-    """Native-JVM zone cleansing; accepts any input type (cast to string)."""
-    z = F.regexp_replace(col.cast("string"), "[^a-zA-Z0-9]", " ")
-    z = F.trim(F.regexp_replace(z, " +", " "))
-    return F.when(F.substring(z, 1, 1) == "8", F.substring(z, 1, 5)).otherwise(z)
-
-
 # ------------------------------------------------------------------ SQL text
 def cleanse_street_sql(expr: str) -> str:
-    """ANSI SQL fragment (DuckDB + Spark SQL) computing _cleanse_street.
-
-    DuckDB regexp_replace needs the 'g' flag for replace-all; Spark SQL's
-    replaces all by default and rejects a 4th arg — so this emits the DuckDB
-    form. Use cleanse_street_spark_sql for Spark SQL strings.
-    """
+    """DuckDB SQL fragment computing _cleanse_street (regexp_replace needs
+    the 'g' flag to replace all)."""
     return (
         f"trim(regexp_replace(regexp_replace(replace({expr}, '&', 'and'),"
         f" '[^a-zA-Z0-9]', ' ', 'g'), ' +', ' ', 'g'))"

@@ -18,9 +18,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
-
-from .grammar import _PARSE_TYPE
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 ADDRESS_PATTERN = r"((?:[0-9]|PO BOX |P O BOX )[0-9A-Z ]*), ([0-9A-Z][0-9A-Z ]*)\."
 
@@ -36,10 +34,6 @@ MSG_TRUNCATE = 500  # reference geocode.py:254
 def street_too_long_msg(n: int) -> str:
     return f"street too long: {n} characters"
 
-_OUT_TYPE = StructType(
-    [StructField("street", StringType()), StructField("zone", StringType())]
-)
-
 
 def _extract_batch(text: pd.Series) -> pd.DataFrame:
     ex = text.astype("string").str.extract(ADDRESS_PATTERN, expand=True)
@@ -47,34 +41,24 @@ def _extract_batch(text: pd.Series) -> pd.DataFrame:
     return ex
 
 
-# Both kernels are pure functions of `text` and deterministic, so
-# source-column filters (a resume's batch key) push below them;
-# tests/test_plans.py pins one stage.
-_extract_udf = F.pandas_udf(_extract_batch, _OUT_TYPE)
-
-
-def extract_addresses(pages: DataFrame) -> DataFrame:
-    """pages(url, text, ...) -> (url, street, zone).
-
-    Keeps pages without an address (street/zone NULL) so the downstream
-    geocode preserves one-output-row-per-input-row accounting (reference
-    geocode.py:171-250). Column pruning: only url+text are read.
-    """
-    return pages.select(
-        "url", _extract_udf(F.col("text")).alias("a")
-    ).select("url", F.col("a.street").alias("street"), F.col("a.zone").alias("zone"))
-
-
-_FULL_TYPE = StructType(
+# the staged parsed relation: what _cleanse_parse returns for each row
+_STAGED_TYPE = StructType(
     [
-        StructField("street", StringType()),
-        StructField("zone", StringType()),
         StructField("cleansed_street", StringType()),
         StructField("cleansed_zone", StringType()),
         StructField("zone_key", StringType()),
+        StructField("addr_type", StringType()),
+        StructField("house", LongType()),
+        StructField("predir", StringType()),
+        StructField("street_name", StringType()),
+        StructField("stype", StringType()),
+        StructField("sufdir", StringType()),
+        StructField("error", StringType()),
     ]
-    + list(_PARSE_TYPE.fields)
-    + [StructField("error", StringType())]
+)
+_FULL_TYPE = StructType(
+    [StructField("street", StringType()), StructField("zone", StringType())]
+    + _STAGED_TYPE.fields
 )
 
 
@@ -85,7 +69,9 @@ def capture_per_row(kernel, error_row, *frames) -> pd.DataFrame:
     one-row slices of `frames` (the same code, so a healthy row's values
     are identical), and a row that still raises becomes error_row(
     str(ex)[:500]) (reference geocode.py:253-254) instead of failing the
-    task: one poisoned row in a trillion must not kill a job."""
+    task: one poisoned row in a trillion must not kill a job. The rows are
+    reassembled as objects, so an integer column beside an error row's
+    NULL stays exact instead of widening to float64."""
     try:
         return kernel(*frames)
     except Exception:
@@ -96,7 +82,7 @@ def capture_per_row(kernel, error_row, *frames) -> pd.DataFrame:
                     "records")
             except Exception as ex:  # the reference's per-row capture
                 rows.append(error_row(str(ex)[:MSG_TRUNCATE]))
-        return pd.DataFrame(rows, columns=list(error_row("")))
+        return pd.DataFrame(rows, columns=list(error_row("")), dtype=object)
 
 
 def _cleanse_parse(street: pd.Series, zone: pd.Series) -> pd.DataFrame:
@@ -105,10 +91,12 @@ def _cleanse_parse(street: pd.Series, zone: pd.Series) -> pd.DataFrame:
 
     street = street.reset_index(drop=True)
     cs = pd_cleanse_street(street).fillna("")
-    # missing zone cleanses to '' (cleanse_input coalesces the same way)
+    # a missing street or zone cleanses to '' (the oracle coalesces too)
     cz = pd_cleanse_zone(zone.reset_index(drop=True).fillna("")).fillna("")
-    parsed = pd.DataFrame([parse_street_py(v) for v in cs],
-                          columns=list(PARSE_FIELDS))
+    rows = [parse_street_py(v) for v in cs]
+    parsed = pd.DataFrame(rows, columns=list(PARSE_FIELDS))
+    # nullable, so a house beside an INVALID row's NULL stays exact
+    parsed["house"] = pd.array([r["house"] for r in rows], dtype="Int64")
     err = pd.Series(
         [street_too_long_msg(int(n)) if pd.notna(n) and n > MAX_STREET_LEN
          else None for n in street.str.len()],
@@ -131,10 +119,11 @@ def _parse_error_row(message: str) -> dict:
 
 
 def cleanse_parse_batch(street: pd.Series, zone: pd.Series) -> pd.DataFrame:
-    """The pandas twin of operators.geocode.parse_input(cleanse_input(df)):
-    cleansed_street, cleansed_zone, zone_key, the six parse fields and the
-    F5 street-length guard `error`, for string columns (street, zone), with
-    the per-row error capture (capture_per_row)."""
+    """The engine's cleanse and parse (operators.geocode.parse_input, and
+    geocode() before its match): cleansed_street, cleansed_zone, zone_key,
+    the six parse fields and the F5 street-length guard `error`, for string
+    columns (street, zone), with the per-row error capture
+    (capture_per_row)."""
     return capture_per_row(
         _cleanse_parse,
         lambda m: {k: v for k, v in _parse_error_row(m).items()
@@ -150,12 +139,9 @@ def _extract_parse(text: pd.Series) -> pd.DataFrame:
 
 
 def _extract_parse_batch(text: pd.Series) -> pd.DataFrame:
-    """Fused extract + cleanse + parse — ONE Python round trip per batch.
-
-    Semantically identical to extract_addresses -> cleanse_input ->
-    parse_input (same regex, the tested pd_cleanse_* twins of the Catalyst
-    cleansing, the same parse_street_py grammar); fused so the hot path pays
-    one JVM<->Python Arrow boundary instead of two.
+    """Fused extract + cleanse + parse — ONE Python round trip per batch:
+    the extraction regex, then the same _cleanse_parse kernel as
+    cleanse_parse_batch.
 
     Error capture (F5/P5): the vectorized path computes the deterministic
     street-length guard as a column; anything else that throws goes
@@ -165,56 +151,47 @@ def _extract_parse_batch(text: pd.Series) -> pd.DataFrame:
     return capture_per_row(_extract_parse, _parse_error_row, text)
 
 
-_extract_parse_udf = F.pandas_udf(_extract_parse_batch, _FULL_TYPE)
-
-
 def extract_and_parse(pages: DataFrame, progress_acc=None) -> DataFrame:
     """pages -> the geocode_parsed() input schema, in one Arrow stage.
 
-    Produces exactly what operators.geocode.parse_input(cleanse_input(
-    extract_addresses(pages))) produces, with one Python boundary instead of
-    two (the second boundary showed up as blocked executor time at high
-    parallelism).
+    Produces what operators.geocode.parse_input(cleanse_input(
+    extract_addresses(pages), "url")) produces, with one Python boundary
+    instead of two.
 
     progress_acc (A4, reference geocode.py:256-258): an optional Spark
     accumulator receiving each Arrow batch's row count — the row-cadence
     source for progress.ProgressReporter. It must be captured in the UDF
     closure (counting_pandas_udf): forked Python workers re-import this
-    module, so a driver-set global would be None worker-side. Default path
-    reuses the module-level UDF unchanged.
+    module, so a driver-set global would be None worker-side.
     """
-    if progress_acc is not None:
-        from .progress import counting_pandas_udf
+    # imported here: a worker imports this module, and needs no progress
+    from .progress import counting_pandas_udf
 
-        udf = counting_pandas_udf(_extract_parse_batch, _FULL_TYPE,
-                                  progress_acc)
-    else:
-        udf = _extract_parse_udf
     a = pages.select(
         F.col("url").cast("string").alias("primary_key"),
-        udf(F.col("text")).alias("a"),
+        counting_pandas_udf(_extract_parse_batch, _FULL_TYPE, progress_acc)(
+            F.col("text")).alias("a"),
     )
     return a.select(
         "primary_key",
         F.col("a.street").alias("input_street"),
         F.col("a.zone").alias("input_zone"),
-        F.col("a.cleansed_street").alias("cleansed_street"),
-        F.col("a.cleansed_zone").alias("cleansed_zone"),
-        F.col("a.addr_type").alias("addr_type"),
-        F.col("a.house").alias("house"),
-        F.col("a.predir").alias("predir"),
-        F.col("a.street_name").alias("street_name"),
-        F.col("a.stype").alias("stype"),
-        F.col("a.sufdir").alias("sufdir"),
-        F.col("a.zone_key").alias("zone_key"),
-        F.col("a.error").alias("error"),
+        *(f"a.{f}" for f in ("cleansed_street", "cleansed_zone", "addr_type",
+                             "house", "predir", "street_name", "stype",
+                             "sufdir", "zone_key", "error")),
     )
 
 
-def extract_oracle_sql(pages_path: str) -> str:
-    """DuckDB mirror of extract_addresses."""
-    return f"""
-SELECT url,
-       nullif(regexp_extract(text, '{ADDRESS_PATTERN}', 1), '') AS street,
-       nullif(regexp_extract(text, '{ADDRESS_PATTERN}', 2), '') AS zone
-FROM read_parquet('{pages_path}')"""
+def extract_addresses(pages: DataFrame) -> DataFrame:
+    """pages(url, text, ...) -> (url, street, zone): the extraction columns
+    of extract_and_parse.
+
+    Keeps pages without an address (street/zone NULL) so the downstream
+    geocode preserves one-output-row-per-input-row accounting (reference
+    geocode.py:171-250). Column pruning: only url+text are read.
+    """
+    return extract_and_parse(pages).select(
+        F.col("primary_key").alias("url"),
+        F.col("input_street").alias("street"),
+        F.col("input_zone").alias("zone"),
+    )

@@ -8,8 +8,9 @@ tests/test_geocode.py:116) and Utah's grid-address style ('39 N 500 E').
 
 Parse spec (applied to an already-cleansed street, uppercased):
   tokens = split on single space
-  PO-box: if upper street matches ^P ?O BOX [0-9]+$ -> addr_type 'POBOX',
-          house = box number, everything else empty.
+  PO-box: if upper street matches ^P ?O BOX [0-9]{1,18}$ -> addr_type
+          'POBOX', house = box number, everything else empty. A longer
+          box number would not fit in int64 and parses INVALID.
   else:
     valid iff >= 2 tokens and tokens[0] is 1-6 digits
     house   = int(tokens[0])
@@ -18,19 +19,16 @@ Parse spec (applied to an already-cleansed street, uppercased):
     stype   = (new) last remaining token iff street type AND >= 2 tokens remain
     name    = join of what is left (never empty by construction)
 
-Three synchronized implementations (tests cross-check them):
-  parse_street_py (oracle) / parse_street_cols (Catalyst) / parse_street_duckdb_sql
-All are generated from the same DIRECTIONS / STREET_TYPES tables below.
+Two reference forms, both generated from the DIRECTIONS / STREET_TYPES
+tables below: parse_street_py (the Python oracle) and parse_street_duckdb_sql
+(the DuckDB oracle). The engine kernel, extraction._cleanse_parse, calls
+parse_street_py on every row of an Arrow batch; tests/test_grammar.py and
+tests/test_fuzz_parity.py check that kernel against the DuckDB form.
 """
 
 from __future__ import annotations
 
 import re
-
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 # token -> canonical single letter
 DIRECTIONS: dict[str, str] = {
@@ -74,11 +72,12 @@ STREET_TYPES: dict[str, str] = {
     "PARKWAY": "PKWY",
 }
 
-# \Z (Python) / \z (Java, RE2): true end-of-text in all three dialects.
-# $ would also match before a trailing newline in Python and Java but not
-# in RE2 — unreachable on cleansed input, but the three implementations
-# must agree on ANY input (the canonical_url lesson).
-_POBOX_RE = re.compile(r"^P ?O BOX ([0-9]+)\Z")
+# \Z (Python) / \z (RE2): true end-of-text in both dialects. $ would
+# also match before a trailing newline in Python but not in RE2 —
+# unreachable on cleansed input, but the two forms must agree on ANY input
+# (the canonical_url lesson). At most 18 digits: every such box number
+# fits in int64 (the LongType `house` column and DuckDB's BIGINT).
+_POBOX_RE = re.compile(r"^P ?O BOX ([0-9]{1,18})\Z")
 _HOUSE_RE = re.compile(r"^[0-9]{1,6}\Z")
 
 PARSE_FIELDS = ("addr_type", "house", "predir", "street_name", "stype", "sufdir")
@@ -120,124 +119,6 @@ def parse_street_py(cleansed: str) -> dict:
     return out
 
 
-# ------------------------------------------------------- catalyst expressions
-def _dir_norm_col(tok: Column) -> Column:
-    c = F.lit("")
-    expr = None
-    for k, v in DIRECTIONS.items():
-        cond = tok == k
-        expr = F.when(cond, v) if expr is None else expr.when(cond, v)
-    return expr.otherwise(c)
-
-
-def _type_norm_col(tok: Column) -> Column:
-    expr = None
-    for k, v in STREET_TYPES.items():
-        cond = tok == k
-        expr = F.when(cond, v) if expr is None else expr.when(cond, v)
-    return expr.otherwise(F.lit(""))
-
-
-def parse_street_cols(cleansed: Column) -> dict[str, Column]:
-    """Catalyst (JVM, codegen-friendly) parse of a cleansed street column.
-
-    Pure arithmetic over the token array — start/end indices are computed as
-    int columns, so no data-dependent control flow leaves codegen.
-    """
-    up = F.upper(F.coalesce(cleansed, F.lit("")))
-    # \z, not $: Java's $ also matches before a trailing newline while
-    # RE2's (the DuckDB twin) does not. Unreachable on CLEANSED input
-    # (cleansing normalizes all whitespace), but the anchors must agree on
-    # any input or the twin diverges (the canonical_url lesson).
-    pobox_no = F.regexp_extract(up, r"^P ?O BOX ([0-9]+)\z", 1)
-    is_pobox = pobox_no != ""
-
-    toks = F.split(up, " ")
-    n = F.size(toks)
-    first = F.element_at(toks, 1)
-    valid = (n >= 2) & first.rlike("^[0-9]{1,6}\\z")
-
-    dirs = list(DIRECTIONS.keys())
-    types = list(STREET_TYPES.keys())
-
-    has_pre = valid & (n >= 3) & F.element_at(toks, 2).isin(dirs)
-    start = F.when(has_pre, F.lit(2)).otherwise(F.lit(1))  # 0-based start of rest
-    last0 = n - 1  # 0-based last index
-    rest_len0 = last0 - start + 1
-    has_suf = valid & (rest_len0 >= 2) & F.element_at(toks, last0 + 1).isin(dirs)
-    last1 = F.when(has_suf, last0 - 1).otherwise(last0)
-    rest_len1 = last1 - start + 1
-    has_type = valid & (rest_len1 >= 2) & F.element_at(toks, last1 + 1).isin(types)
-    last2 = F.when(has_type, last1 - 1).otherwise(last1)
-
-    name = F.array_join(F.slice(toks, start + 1, last2 - start + 1), " ")
-
-    house = (
-        F.when(is_pobox, pobox_no.cast("bigint"))
-        .when(valid, first.cast("bigint"))
-        .otherwise(F.lit(None).cast("bigint"))
-    )
-    return {
-        "addr_type": F.when(is_pobox, F.lit("POBOX"))
-        .when(valid, F.lit("STREET"))
-        .otherwise(F.lit("INVALID")),
-        "house": house,
-        "predir": F.when(has_pre, _dir_norm_col(F.element_at(toks, 2))).otherwise(
-            F.lit("")
-        ),
-        "street_name": F.when(valid & ~is_pobox, name).otherwise(F.lit("")),
-        "stype": F.when(has_type, _type_norm_col(F.element_at(toks, last1 + 1))).otherwise(
-            F.lit("")
-        ),
-        "sufdir": F.when(has_suf, _dir_norm_col(F.element_at(toks, last0 + 1))).otherwise(
-            F.lit("")
-        ),
-    }
-
-
-def with_parsed_street(df, cleansed_col: str = "cleansed_street"):
-    """Attach the six parse columns to df."""
-    cols = parse_street_cols(F.col(cleansed_col))
-    return df.withColumns(cols)
-
-
-# ------------------------------------------------------------ pandas (Arrow)
-_PARSE_TYPE = StructType(
-    [
-        StructField("addr_type", StringType()),
-        StructField("house", LongType()),
-        StructField("predir", StringType()),
-        StructField("street_name", StringType()),
-        StructField("stype", StringType()),
-        StructField("sufdir", StringType()),
-    ]
-)
-
-
-def _parse_batch(s: pd.Series) -> pd.DataFrame:
-    return pd.DataFrame(
-        [parse_street_py(v) for v in s.fillna("")], columns=list(PARSE_FIELDS)
-    )
-
-
-# Deterministic: the parse is a pure function of the cleansed street, so
-# filters on source columns (a resume's batch-key predicate) are pushed
-# below it to the scan. No plan filters on its output, and Catalyst keeps a
-# projection that references it several times uncollapsed, so the Arrow
-# stage runs once; tests/test_plans.py pins exactly one ArrowEvalPython.
-parse_street_udf = F.pandas_udf(_parse_batch, _PARSE_TYPE)
-
-
-def parse_street_struct(cleansed: Column) -> Column:
-    """Arrow-vectorized parse: one struct column with the six parse fields.
-
-    The hot-path variant used by the geocode operator (the Catalyst
-    expression form above is exact but its token-index CASE trees re-inline
-    the whole `split()` pyramid at every reference — fine evaluated once,
-    pathological when join keys / filters force re-derivation)."""
-    return parse_street_udf(cleansed)
-
-
 # ------------------------------------------------------------------ DuckDB SQL
 def _case_map_sql(tok_expr: str, mapping: dict[str, str]) -> str:
     whens = " ".join(f"WHEN '{k}' THEN '{v}'" for k, v in mapping.items())
@@ -254,8 +135,8 @@ def parse_street_duckdb_sql(cleansed_expr: str) -> str:
 
     Returns a string of comma-separated column expressions computing
     addr_type, house, predir, street_name, stype, sufdir from `cleansed_expr`.
-    Generated from the SAME DIRECTIONS/STREET_TYPES tables as the Spark and
-    Python implementations. DuckDB lists are 1-indexed; list_slice is
+    Generated from the SAME DIRECTIONS/STREET_TYPES tables as the Python
+    implementation. DuckDB lists are 1-indexed; list_slice is
     inclusive on both ends.
     """
     up = f"upper(coalesce({cleansed_expr}, ''))"
@@ -263,7 +144,7 @@ def parse_street_duckdb_sql(cleansed_expr: str) -> str:
     # Use macros via a LATERAL-free approach: repeat expressions (DuckDB CSE's them).
     n = f"len({toks})"
     first = f"{toks}[1]"
-    pobox = f"regexp_extract({up}, '^P ?O BOX ([0-9]+)\\z', 1)"
+    pobox = f"regexp_extract({up}, '^P ?O BOX ([0-9]{{1,18}})\\z', 1)"
     is_pobox = f"({pobox} <> '')"
     valid = f"({n} >= 2 AND regexp_matches({first}, '^[0-9]{{1,6}}\\z'))"
     dirs = list(DIRECTIONS.keys())

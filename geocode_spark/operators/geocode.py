@@ -30,9 +30,11 @@ and shipped to the workers as one memory-mapped file; each query's Arrow
 stage then runs cleanse/parse (or extraction) and the match in the same
 Python round trip:
 
-  geocode()         street/zone -> pd_cleanse_* twins -> parse -> F5
-                    street-length guard -> match
-  geocode_parsed()  staged parsed rows -> match
+  geocode()         street/zone -> extraction.cleanse_parse_batch
+                    (pd_cleanse_* twins, parse, F5 street-length guard)
+                    -> match
+  geocode_parsed()  staged parsed rows -> match; parse_input stages them
+                    with the same cleanse_parse_batch, alone in its stage
   plans.pipeline.geocode_pages   pages -> extract+cleanse+parse -> match
 
 Every input row is handled independently and locally: no aggregation, no
@@ -52,7 +54,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import DEFAULT_ACCEPT_SCORE
-from ..cleansing import cleanse_street_col, cleanse_zone_col
 from .match import (  # noqa: F401  (the matcher's constants, re-exported)
     _POBOX_NAME,
     BASE_SCORE_AP,
@@ -73,47 +74,34 @@ from .match import (  # noqa: F401  (the matcher's constants, re-exported)
 )
 
 
-# ------------------------------------------------------------------ cleansing
+# ------------------------------------------------------- staged parsed rows
 def cleanse_input(df: DataFrame, id_col="id", street_col="street", zone_col="zone") -> DataFrame:
-    """Project the reference input relation and attach cleansed columns.
-
-    Also attaches the F5/P5 `error` column (per-row failure capture,
-    reference geocode.py:253-254): the deterministic street-length guard.
-    The Catalyst form of what geocode()'s Arrow stage computes with
-    extraction.cleanse_parse_batch; it stages a parsed relation for
-    geocode_parsed."""
-    from ..extraction import MAX_STREET_LEN
-
-    street = F.col(street_col).cast("string")
+    """Project the reference input relation (primary_key, input_street,
+    input_zone) from the caller's column names; parse_input cleanses and
+    parses it."""
     return df.select(
         F.col(id_col).cast("string").alias("primary_key"),
-        street.alias("input_street"),
+        F.col(street_col).cast("string").alias("input_street"),
         F.col(zone_col).cast("string").alias("input_zone"),
-        F.coalesce(cleanse_street_col(F.col(street_col)), F.lit("")).alias(
-            "cleansed_street"
-        ),
-        F.coalesce(cleanse_zone_col(F.col(zone_col)), F.lit("")).alias(
-            "cleansed_zone"
-        ),
-        F.when(
-            F.length(street) > MAX_STREET_LEN,
-            F.concat(F.lit("street too long: "),
-                     F.length(street).cast("string"), F.lit(" characters")),
-        ).alias("error"),
     )
 
 
 def parse_input(df: DataFrame) -> DataFrame:
-    """Attach parsed-address columns + the zone join key.
+    """Attach the cleansed, parsed columns, the zone join key and the F5
+    street-length guard `error` to a cleanse_input relation: the staged
+    schema geocode_parsed matches.
 
-    Parsing runs as one Arrow-vectorized stage (grammar.parse_street_struct);
-    its output is a materialized struct, so downstream filters and join keys
-    read fields instead of re-deriving the parse expression tree."""
-    from ..grammar import parse_street_struct
+    One Arrow stage runs extraction.cleanse_parse_batch, the kernel
+    geocode() fuses with its match, so staged and fused rows are equal."""
+    from ..extraction import _STAGED_TYPE, cleanse_parse_batch
 
-    p = df.withColumn("_p", parse_street_struct(F.col("cleansed_street")))
-    return p.select("*", "_p.*").drop("_p").withColumn(
-        "zone_key", F.upper(F.col("cleansed_zone"))
+    parsed = F.pandas_udf(cleanse_parse_batch, _STAGED_TYPE)(
+        F.col("input_street"), F.col("input_zone"))
+    return df.withColumn("_p", parsed).select(
+        *df.columns,
+        *(f"_p.{f}" for f in ("cleansed_street", "cleansed_zone", "error",
+                              "addr_type", "house", "predir", "street_name",
+                              "stype", "sufdir", "zone_key")),
     )
 
 
@@ -278,14 +266,6 @@ def locator_index(pack: DataFrame) -> IndexFile:
     return model_memo(("locator_index", id(pack)), pack, build)
 
 
-def _index_for(packed, address_points, road_centerlines, pobox_points,
-               locators, pobox) -> IndexFile:
-    if packed is None:
-        packed = pack_locators(address_points, road_centerlines,
-                               pobox_points, locators=locators, pobox=pobox)
-    return locator_index(packed)
-
-
 def _in_reference(result: DataFrame, spatial_reference: int) -> DataFrame:
     if spatial_reference == 26912:
         return result
@@ -304,7 +284,6 @@ def geocode(
     pobox: bool = False,
     accept_score: int = DEFAULT_ACCEPT_SCORE,
     spatial_reference: int = 26912,
-    packed: DataFrame | None = None,
 ) -> DataFrame:
     """Full geocode: (id, street, zone) rows -> the 11-column result contract.
 
@@ -314,13 +293,13 @@ def geocode(
     in {'all','addressPoints','roadCenterlines'} (reference
     geocode.py:26,128). `spatial_reference` re-expresses output x/y (J7,
     geocode.py:25,115,204): 26912 native or 4326 via the from-scratch
-    transverse-Mercator inverse. Pass `packed` (a pack_locators result) to
-    reuse one prebuilt pack; locators/pobox are ignored then.
+    transverse-Mercator inverse.
     """
     from ..extraction import cleanse_parse_batch
 
-    index = _index_for(packed, address_points, road_centerlines,
-                       pobox_points, locators, pobox)
+    index = locator_index(pack_locators(
+        address_points, road_centerlines, pobox_points, locators=locators,
+        pobox=pobox))
 
     # the UDF pickles this closure, and a worker imports the modules of
     # the names it uses: extraction and match, not this module
@@ -348,19 +327,18 @@ def geocode_parsed(
     pobox: bool = False,
     accept_score: int = DEFAULT_ACCEPT_SCORE,
     spatial_reference: int = 26912,
-    packed: DataFrame | None = None,
 ) -> DataFrame:
     """geocode() over an already cleansed + parsed relation: match only.
 
     `base` needs primary_key, input_street, input_zone, cleansed_street,
-    cleansed_zone, zone_key and the six parse fields — the schema
-    parse_input(cleanse_input(df)) and extraction.extract_and_parse
-    produce — and optionally the F5 `error` column. Pass `packed` (a
-    pack_locators result) to reuse one prebuilt pack; locators/pobox are
-    ignored then.
+    cleansed_zone, zone_key and the six parse fields — the staged schema
+    that parse_input(cleanse_input(df)) and extraction.extract_and_parse
+    produce, both with extraction's cleanse/parse kernel — and optionally
+    the F5 `error` column.
     """
-    index = _index_for(packed, address_points, road_centerlines,
-                       pobox_points, locators, pobox)
+    index = locator_index(pack_locators(
+        address_points, road_centerlines, pobox_points, locators=locators,
+        pobox=pobox))
     error = (F.col("error") if "error" in base.columns
              else F.lit(None).cast("string"))
     house = F.col("house").cast("bigint")

@@ -394,9 +394,10 @@ def match(parsed: pd.DataFrame, index: LocatorIndex,
           accept_score: int) -> pd.DataFrame:
     """The 8 result columns (MATCH_COLUMNS) for a batch of parsed rows.
 
-    `parsed` holds the parse_input(cleanse_input(...)) columns the match
-    reads: cleansed_street, cleansed_zone, zone_key, addr_type, house,
-    predir, street_name, stype, sufdir and error. If the vectorized match
+    `parsed` holds the staged columns that extraction's cleanse/parse
+    kernel produces (cleanse_parse_batch, which parse_input and geocode()
+    run) and the match reads: cleansed_street, cleansed_zone, zone_key,
+    addr_type, house, predir, street_name, stype, sufdir and error. If the vectorized match
     raises, the batch re-runs row at a time and a row that still raises
     becomes an error row carrying str(ex)[:500] (F5)."""
     from ..extraction import capture_per_row

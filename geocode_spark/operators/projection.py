@@ -207,11 +207,6 @@ def _forward_exprs(wkid: int, lon: str, lat: str) -> dict[str, str]:
     return wgs84_to_utm_sql(lon, lat, params=utm_params(wkid))
 
 
-def utm_to_wgs84_cols(x: str = "x", y: str = "y",
-                      params: TMParams = _P_NATIVE) -> dict[str, Column]:
-    return {k: F.expr(v) for k, v in utm_to_wgs84_sql(x, y, params).items()}
-
-
 def stage_utm_to_wgs84(df: DataFrame, x: str = "x", y: str = "y",
                        params: TMParams = _P_NATIVE,
                        lon: str = "lon", lat: str = "lat") -> DataFrame:

@@ -983,64 +983,6 @@ _STAR_DIRS = [  # CCW unit directions x1000; 707/1000 ~ cos 45
 ]
 
 
-def polygon_metrics(polys: DataFrame) -> DataFrame:
-    """(gid, n_vertices, area2, cx_micro, cy_micro) per ring: area2 =
-    signed shoelace sum in sq-milli units (positive = CCW), centroid in
-    micro units; NULL centroid for degenerate (zero-area) rings. Pure
-    projection — zero exchanges, arbitrary ring sizes."""
-    n = F.size("xs")
-    x1 = F.element_at("xs", 1)
-    y1 = F.element_at("ys", 1)
-    # cyclic next index (1-based): i in [1, n] -> i % n + 1
-    def _cross(i):
-        nx = i % n + 1
-        return (
-            (F.element_at("xs", i) - x1) * (F.element_at("ys", nx) - y1)
-            - (F.element_at("xs", nx) - x1) * (F.element_at("ys", i) - y1)
-        )
-
-    idx = F.sequence(F.lit(1), n)
-    zero = F.lit(0).cast("bigint")
-    area2 = F.aggregate(idx, zero, lambda a, i: a + _cross(i))
-    cnum_x = F.aggregate(
-        idx, zero,
-        lambda a, i: a
-        + ((F.element_at("xs", i) - x1)
-           + (F.element_at("xs", i % n + 1) - x1)) * _cross(i),
-    )
-    cnum_y = F.aggregate(
-        idx, zero,
-        lambda a, i: a
-        + ((F.element_at("ys", i) - y1)
-           + (F.element_at("ys", i % n + 1) - y1)) * _cross(i),
-    )
-    def _cent(base_milli, cnum):
-        return F.when(
-            F.col("area2") != 0,
-            base_milli * F.lit(1000)
-            + F.round(
-                F.lit(1000.0) * cnum.cast("double")
-                / (F.lit(3.0) * F.col("area2").cast("double")),
-                0,
-            ).cast("bigint"),
-        )
-
-    return (
-        polys.select(
-            "gid", "xs", "ys",
-            n.cast("bigint").alias("n_vertices"),
-            area2.alias("area2"),
-            cnum_x.alias("cnx"),
-            cnum_y.alias("cny"),
-        )
-        .select(
-            "gid", "n_vertices", "area2",
-            _cent(F.element_at("xs", 1), F.col("cnx")).alias("cx_micro"),
-            _cent(F.element_at("ys", 1), F.col("cny")).alias("cy_micro"),
-        )
-    )
-
-
 def _star_ring_exprs(res: int, bbox, dialect: str,
                      radius_scale: int = 1):
     """(gid_sql, xs_sql, ys_sql) building one deterministic 8-vertex CCW

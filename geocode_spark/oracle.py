@@ -47,13 +47,6 @@ def _expand_dir_sql(c: str) -> str:
     return f"(CASE {c} {whens} ELSE NULL END)"
 
 
-def _rank_key_sql(score: str, priority: int, cand_id: str) -> str:
-    return (
-        f"((CAST({score} AS BIGINT) * 10 + (9 - {priority})) * 100000000"
-        f" + (99999999 - {cand_id}))"
-    )
-
-
 def _match_address_sql(house: str, predir: str, name: str, stype: str,
                        sufdir: str, grid: str) -> str:
     # `||`, not concat(): DuckDB's concat() skips a NULL argument, while the

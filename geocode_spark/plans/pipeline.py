@@ -23,6 +23,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 from ..extraction import _extract_parse_batch
 from ..operators.geocode import locator_index, pack_locators
 from ..operators.match import MATCH_FIELDS, match
+from ..progress import counting_pandas_udf
 
 _PAGES_TYPE = StructType(
     [StructField("input_street", StringType()),
@@ -83,12 +84,7 @@ def geocode_pages(
             axis=1,
         )
 
-    if progress_acc is not None:
-        from ..progress import counting_pandas_udf
-
-        udf = counting_pandas_udf(kernel, _PAGES_TYPE, progress_acc)
-    else:
-        udf = F.pandas_udf(kernel, _PAGES_TYPE)
+    udf = counting_pandas_udf(kernel, _PAGES_TYPE, progress_acc)
     return pages.select(
         F.col("url").cast("string").alias("primary_key"),
         udf(F.col("text")).alias("a"),

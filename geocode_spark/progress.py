@@ -73,7 +73,10 @@ def counting_pandas_udf(batch_fn, out_type, acc):
     """Wrap a pandas batch kernel so every Arrow batch adds its row count to
     the accumulator `acc`. Semantics are untouched — same kernel, same output
     type, deterministic like the unwrapped kernels — so a resume counts only
-    its pending batches' rows (tests/test_progress.py pins exactly-once)."""
+    its pending batches' rows (tests/test_progress.py pins exactly-once).
+    With no accumulator it is the plain pandas UDF of the kernel."""
+    if acc is None:
+        return F.pandas_udf(batch_fn, out_type)
 
     def fn(series):
         out = batch_fn(series)

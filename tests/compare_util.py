@@ -92,3 +92,24 @@ def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame,
                 )
             else:
                 assert x == y, f"{label}: {col}[{i}] {x!r} != {y!r}"
+
+
+def staged_rows(spark, streets, zones=None, zone_type="string") -> list:
+    """(street, zone) pairs through the engine's cleanse/parse stage,
+    parse_input(cleanse_input(df)), as one dict per input row, in input
+    order. Rows are collected, not converted with toPandas, so a 64-bit
+    house stays an exact int. `zones` defaults to the streets. The input
+    goes through Arrow, not a Python RDD, and in one partition: a handful
+    of strings needs one Python task."""
+    from geocode_spark.operators.geocode import cleanse_input, parse_input
+
+    zones = list(streets) if zones is None else list(zones)
+    pdf = pd.DataFrame({
+        "id": [f"{i:06d}" for i in range(len(streets))],
+        "street": pd.array(list(streets), dtype="string"),
+        "zone": pd.Series(zones, dtype=object),
+    })
+    df = spark.createDataFrame(
+        pdf, f"id string, street string, zone {zone_type}").coalesce(1)
+    rows = parse_input(cleanse_input(df)).collect()
+    return sorted((r.asDict() for r in rows), key=lambda r: r["primary_key"])

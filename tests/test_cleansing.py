@@ -1,19 +1,18 @@
 """Byte-identical cleansing parity (reference tests/test_geocode.py:18-33 +
-cross-fuzz of all three implementations)."""
+cross-fuzz of the two reference forms and the engine's cleanse/parse
+stage)."""
 
 import random
 import string
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 import duckdb
 
+from compare_util import staged_rows
 from geocode_spark.cleansing import (
-    cleanse_street_col,
     cleanse_street_sql,
-    cleanse_zone_col,
     cleanse_zone_sql,
     pd_cleanse_street,
     pd_cleanse_zone,
@@ -78,16 +77,14 @@ def test_pandas_matches_py():
 
 
 def test_spark_col_matches_py(spark):
+    """The engine's Arrow cleanse/parse stage cleanses like the oracle."""
     vals = _fuzz_strings()
-    df = spark.createDataFrame([(v,) for v in vals], ["s"])
-    rows = df.select(
-        "s",
-        cleanse_street_col(F.col("s")).alias("cs"),
-        cleanse_zone_col(F.col("s")).alias("cz"),
-    ).collect()
-    for r in rows:
-        assert r.cs == py_cleanse_street(r.s), repr(r.s)
-        assert r.cz == py_cleanse_zone(r.s), repr(r.s)
+    rows = staged_rows(spark, vals)
+    assert len(rows) == len(vals)
+    for v, r in zip(vals, rows):
+        assert r["input_street"] == v
+        assert r["cleansed_street"] == py_cleanse_street(v), repr(v)
+        assert r["cleansed_zone"] == py_cleanse_zone(v), repr(v)
 
 
 def test_duckdb_sql_matches_py():
@@ -103,5 +100,8 @@ def test_duckdb_sql_matches_py():
 
 
 def test_zone_accepts_int(spark):
-    df = spark.createDataFrame([(84124,)], ["z"])
-    assert df.select(cleanse_zone_col(F.col("z")).alias("c")).first().c == "84124"
+    """An integer zone column is cast to string before the stage cleanses
+    it (the reference's str(data))."""
+    (row,) = staged_rows(spark, ["1 MAIN"], [84124], zone_type="int")
+    assert row["input_zone"] == "84124"
+    assert row["cleansed_zone"] == "84124" and row["zone_key"] == "84124"

@@ -1,11 +1,12 @@
 """Cross-dialect differential fuzzing (hypothesis).
 
-The byte-identical-per-url contract rests on THREE implementations agreeing:
-the reference-parity Python functions (ground truth), the Spark/Catalyst
-column expressions (Java regex), and the DuckDB oracle SQL (RE2). The
-fixture corpus only exercises well-formed shapes, so this fuzzes arbitrary
-strings — unicode soup, control characters, '&' runs, digit walls,
-street-ish compositions — in BATCHES (one Spark job + one DuckDB query per
+The byte-identical-per-url contract rests on THREE forms agreeing: the
+reference-parity Python functions (ground truth), the engine's cleanse/parse
+kernel (Python `re` over pandas, run in its Arrow stage) and the DuckDB oracle
+SQL (RE2). The fixture corpus only exercises well-formed shapes, so this
+fuzzes arbitrary strings — unicode soup, control characters, '&' runs, digit
+walls, street-ish compositions, house numbers and PO boxes on both sides of
+their digit limits — in BATCHES (one Spark job + one DuckDB query per
 hypothesis example, ~40 strings each) and asserts elementwise equality."""
 
 import os
@@ -20,15 +21,14 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from compare_util import staged_rows
 from geocode_spark.cleansing import (
-    cleanse_street_col,
     cleanse_street_sql,
-    cleanse_zone_col,
     cleanse_zone_sql,
     py_cleanse_street,
     py_cleanse_zone,
 )
-from geocode_spark.grammar import PARSE_FIELDS, parse_street_cols, parse_street_duckdb_sql
+from geocode_spark.grammar import PARSE_FIELDS, parse_street_duckdb_sql
 
 # printable-ish unicode + the characters the cleansing rules care about
 _CHARS = st.characters(
@@ -41,7 +41,17 @@ STREETISH = st.builds(
     lambda h, pre, words, typ, suf: " ".join(
         p for p in [h, pre, *words, typ, suf] if p
     ),
-    st.one_of(st.integers(0, 9_999_999).map(str), st.just(""), st.just("P O BOX 12")),
+    st.one_of(
+        st.integers(0, 9_999_999).map(str),
+        # 7-digit houses: one past the grammar's 1-6 digits
+        st.integers(1_000_000, 9_999_999).map(str),
+        st.just(""),
+        st.just("P O BOX 12"),
+        # 18 digits fit in int64; 19 and 20 parse INVALID
+        st.tuples(st.sampled_from(["PO BOX ", "P O BOX "]),
+                  st.sampled_from([18, 19, 20]),
+                  st.integers(0, 9)).map(lambda t: t[0] + str(t[2]) * t[1]),
+    ),
     st.sampled_from(_DIRS),
     st.lists(st.sampled_from(["MAIN", "Oak", "1300", "s", "foo&bar"]), max_size=3),
     st.sampled_from(_TYPES),
@@ -83,10 +93,9 @@ def _spark_eval(spark, strings, *cols):
 @given(BATCH)
 @settings(**_FUZZ_SETTINGS)
 def test_cleanse_street_three_way_parity(spark, batch):
+    """Python oracle, the engine's Arrow stage and DuckDB."""
     want = [py_cleanse_street(s) for s in batch]
-    got_spark = _spark_eval(
-        spark, batch, cleanse_street_col(F.col("s")).alias("v")
-    )["v"].tolist()
+    got_spark = [r["cleansed_street"] for r in staged_rows(spark, batch)]
     got_duck = _duck(batch, f"{cleanse_street_sql('s')} AS v")["v"].tolist()
     assert got_spark == want
     assert got_duck == want
@@ -95,10 +104,9 @@ def test_cleanse_street_three_way_parity(spark, batch):
 @given(BATCH)
 @settings(**_FUZZ_SETTINGS)
 def test_cleanse_zone_three_way_parity(spark, batch):
+    """Python oracle, the engine's Arrow stage and DuckDB."""
     want = [py_cleanse_zone(s) for s in batch]
-    got_spark = _spark_eval(
-        spark, batch, cleanse_zone_col(F.col("s")).alias("v")
-    )["v"].tolist()
+    got_spark = [r["cleansed_zone"] for r in staged_rows(spark, batch)]
     got_duck = _duck(batch, f"{cleanse_zone_sql('s')} AS v")["v"].tolist()
     assert got_spark == want
     assert got_duck == want
@@ -107,21 +115,26 @@ def test_cleanse_zone_three_way_parity(spark, batch):
 @given(BATCH)
 @settings(**_FUZZ_SETTINGS)
 def test_parse_street_spark_duckdb_parity(spark, batch):
-    """Grammar parity over CLEANSED input (the grammar's precondition)."""
+    """Grammar parity over CLEANSED input (the grammar's precondition):
+    the engine's Arrow stage against DuckDB. Cleansing is idempotent, so
+    the stage's own cleansing leaves the input as it is. Both sides are
+    read as Python values, so an 18-digit box compares exactly."""
     cleansed = [py_cleanse_street(s) for s in batch]
-    cols = parse_street_cols(F.col("s"))
-    got_spark = _spark_eval(
-        spark, cleansed, *[cols[f].alias(f) for f in PARSE_FIELDS]
-    )
-    got_duck = _duck(cleansed, parse_street_duckdb_sql("s"))
-    for f in PARSE_FIELDS:
-        a = got_spark[f].tolist()
-        b = got_duck[f].tolist()
-        # house is nullable numeric: compare through pandas NA-safe equality
-        assert len(a) == len(b)
-        for x, y, src in zip(a, b, cleansed):
-            ok = (x == y) or (pd.isna(x) and pd.isna(y))
-            assert ok, f"{f}: {x!r} != {y!r} for input {src!r}"
+    got_spark = staged_rows(spark, cleansed)
+    con = duckdb.connect()
+    try:
+        con.register("t", pd.DataFrame(
+            {"i": range(len(cleansed)),
+             "s": pd.array(cleansed, dtype="string")}))
+        got_duck = con.sql(f"SELECT {parse_street_duckdb_sql('s')} FROM t"
+                           " ORDER BY i").fetchall()
+    finally:
+        con.close()
+    assert len(got_spark) == len(got_duck) == len(cleansed)
+    for r, d, src in zip(got_spark, got_duck, cleansed):
+        assert r["cleansed_street"] == src
+        for f, y in zip(PARSE_FIELDS, d):
+            assert r[f] == y, f"{f}: {r[f]!r} != {y!r} for input {src!r}"
 
 
 # --------------------------------------------------------- numeric layer fuzz

@@ -2,14 +2,13 @@
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 import duckdb
 
+from compare_util import staged_rows
 from geocode_spark.cleansing import py_cleanse_street
 from geocode_spark.grammar import (
     PARSE_FIELDS,
-    parse_street_cols,
     parse_street_duckdb_sql,
     parse_street_py,
 )
@@ -35,6 +34,11 @@ CASES = {
     "": ("INVALID", None, "", "", "", ""),
     "0 north 0 east": ("STREET", 0, "N", "0", "", "E"),
     "1234567 MAIN": ("INVALID", None, "", "", "", ""),  # 7-digit house
+    # box numbers: at most 18 digits, so every one fits in int64
+    "PO BOX 999999999999999999": ("POBOX", 999_999_999_999_999_999,
+                                  "", "", "", ""),
+    "PO BOX 9999999999999999999": ("INVALID", None, "", "", "", ""),
+    "P O BOX 99999999999999999999": ("INVALID", None, "", "", "", ""),
 }
 
 
@@ -58,14 +62,14 @@ def _inputs():
 
 
 def test_spark_parse_matches_py(spark):
+    """The engine's Arrow cleanse/parse stage parses like the oracle."""
     vals = _inputs()
-    df = spark.createDataFrame([(v,) for v in vals], ["cs"])
-    cols = parse_street_cols(F.col("cs"))
-    rows = df.select("cs", *[cols[f].alias(f) for f in PARSE_FIELDS]).collect()
-    for r in rows:
-        want = parse_street_py(r.cs)
+    rows = staged_rows(spark, vals, ["84101"] * len(vals))
+    assert len(rows) == len(vals)
+    for cs, r in zip(vals, rows):
+        want = parse_street_py(cs)
         for f in PARSE_FIELDS:
-            assert getattr(r, f) == want[f], (r.cs, f, want)
+            assert r[f] == want[f], (cs, f, want)
 
 
 def test_duckdb_parse_matches_py():
