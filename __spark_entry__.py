@@ -118,22 +118,27 @@ def _q_geocode_utm13(spark, sf_dir):
     return _geo(spark, sf_dir, locators="all", pobox=True, spatial_reference=26913)
 
 
-def _q_utm_roundtrip(spark, sf_dir):
-    """Forward+inverse transverse Mercator as one plan (J7 self-check)."""
-    from pyspark.sql import functions as F
+_ROUNDTRIP_COLS = ("lon", "lat", "rt_x", "rt_y")
 
+
+def _roundtrip_steps():
+    """Inverse then forward transverse Mercator (J7 self-check): native x/y
+    -> lon/lat -> rt_x/rt_y, one step list for the query and its oracle."""
     from geocode_spark.operators.projection import (
-        stage_utm_to_wgs84,
-        wgs84_to_utm_cols,
+        NATIVE_WKID,
+        forward_steps,
+        inverse_steps,
     )
 
+    return inverse_steps() + forward_steps(NATIVE_WKID, x="rt_x", y="rt_y")
+
+
+def _q_utm_roundtrip(spark, sf_dir):
+    from geocode_spark.steps import with_steps
+
     pts = _success_points(spark, sf_dir)
-    # staged-subterm inverse: identical arithmetic to utm_to_wgs84_sql (the
-    # oracle form) but keeps the plan inside whole-stage codegen
-    ll = stage_utm_to_wgs84(pts, "x", "y")
-    return ll.withColumns(
-        {f"rt_{k}": v for k, v in wgs84_to_utm_cols("lon", "lat").items()}
-    ).select("primary_key", "lon", "lat", "rt_x", "rt_y")
+    return with_steps(pts, _roundtrip_steps(), keep=_ROUNDTRIP_COLS).select(
+        "primary_key", *_ROUNDTRIP_COLS)
 
 
 def _q_extract(spark, sf_dir):
@@ -1425,7 +1430,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # ------------------------------------------------------------------- oracles
 def oracle_sql() -> dict[str, str]:
     from geocode_spark.cleansing import cleanse_street_sql, cleanse_zone_sql
-    from geocode_spark.grammar import parse_street_duckdb_sql
+    from geocode_spark.grammar import PARSE_FIELDS, parse_street_duckdb_sql
     from geocode_spark.operators.geocode import (
         metrics_rollup_oracle_sql as _rollup_sql,
     )
@@ -1605,20 +1610,17 @@ def oracle_sql() -> dict[str, str]:
         token_apportionment_oracle_sql,
     )
 
-    from geocode_spark.operators.projection import (
-        reproject_oracle_sql,
-        utm_to_wgs84_sql,
-        wgs84_to_utm_sql,
-    )
+    from geocode_spark.operators.projection import reproject_oracle_sql
+    from geocode_spark.steps import steps_sql
 
     fix = _fix(ORACLE_SF_DIR)
     addresses = f"{fix}/addresses.parquet"
-    _ll = utm_to_wgs84_sql("x", "y")
-    _rt = wgs84_to_utm_sql(_ll["lon"], _ll["lat"])
     success_src = (
         f"SELECT primary_key, x, y, score FROM ("
         f"{geocode_oracle_sql(fix, pobox=True)}) WHERE message IS NULL"
     )
+    cleansed = (f"(SELECT id, {cleanse_street_sql('street')} AS cleansed_street"
+                f" FROM read_parquet('{addresses}'))")
     return {
         "cleanse": f"""
             SELECT id,
@@ -1626,9 +1628,8 @@ def oracle_sql() -> dict[str, str]:
                    {cleanse_zone_sql('zone')} AS cleansed_zone
             FROM read_parquet('{addresses}')""",
         "parse_address": f"""
-            SELECT id, {parse_street_duckdb_sql(
-                "coalesce(" + cleanse_street_sql('street') + ", '')")}
-            FROM read_parquet('{addresses}')""",
+            SELECT id, {', '.join(PARSE_FIELDS)}
+            FROM {parse_street_duckdb_sql(cleansed, 'cleansed_street')}""",
         "geocode_all": geocode_oracle_sql(fix, pobox=True),
         "geocode_address_points": geocode_oracle_sql(fix, locators="addressPoints"),
         "geocode_centerlines": geocode_oracle_sql(fix, locators="roadCenterlines"),
@@ -1643,10 +1644,9 @@ def oracle_sql() -> dict[str, str]:
             geocode_oracle_sql(fix, pobox=True), wkid=26913
         ),
         "utm_wgs84_roundtrip": f"""
-            SELECT primary_key,
-                   {_ll['lon']} AS lon, {_ll['lat']} AS lat,
-                   {_rt['x']} AS rt_x, {_rt['y']} AS rt_y
-            FROM ({success_src})""",
+            SELECT primary_key, {', '.join(_ROUNDTRIP_COLS)}
+            FROM {steps_sql(f"({success_src})", _roundtrip_steps(),
+                            keep=_ROUNDTRIP_COLS)}""",
         "extract_addresses": f"""
             SELECT id AS url, street, zone FROM {pages_source_sql(fix)}""",
         "geocode_pages": geocode_pages_oracle_sql(fix, pobox=True),

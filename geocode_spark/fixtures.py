@@ -6,17 +6,16 @@ Generates, for a given scale factor, the engine's input + locator tables:
   addresses        (id, street, zone)                      — reference input relation
   addresses_failfast (id, street, zone)                    — 25 leading failures + 5 good
   address_points   (cand_id, grid, house_number, predir, street_name, stype,
-                    sufdir, zip5, x, y)                    — broadcast locator
+                    sufdir, zip5, x, y)                    — locator
   road_centerlines (cand_id, grid, predir, street_name, stype, sufdir, zip5,
-                    from_addr, to_addr, x0, y0, x1, y1)    — broadcast locator
-  pobox_points     (cand_id, zip5, box_number, x, y)       — broadcast locator
+                    from_addr, to_addr, x0, y0, x1, y1)    — locator
+  pobox_points     (cand_id, zip5, box_number, x, y)       — locator
   grid_polygons    (grid, x1..x4, y1..y4, ring)            — convex CCW quads
 
 Everything is a pure function of (seed=42, sf). Files are written with
 pyarrow (single file, fixed row order) so the Spark engine and the DuckDB
 oracle read byte-identical data. Zones are drawn with a hot-key distribution
-(SALT LAKE CITY ≈ 55%) to exercise salted repartitioning (north-rule skew
-mandate).
+(SALT LAKE CITY ≈ 55%) to exercise skew (north-rule skew mandate).
 
 Reference evidence for shapes: input schema `id,street,zone`
 (reference tests/normal.csv:1), garbage rows `'0 north 0 east','null island'`

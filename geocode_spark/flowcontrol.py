@@ -7,8 +7,9 @@ geocode.py:242, disabled by ``ignore_failures`` at geocode.py:120,130).
 Row order is meaningless in a distributed plan, so the Spark-native analog is
 a **driver-side probe**: run the pipeline on ``limit(probe_count)`` rows
 first; if every probe row fails, raise before launching the full job. The
-probe is cheap (25 rows through broadcast joins) and the exception type +
-message match the reference (geocode.py:311-317).
+probe is cheap (25 rows through the one Arrow match stage, against the
+shared locator index) and the exception type + message match the reference
+(geocode.py:311-317).
 
 Also here: the reference's custom exceptions (geocode.py:299-317) and its
 human-friendly elapsed-time formatter (P4, geocode.py:65-81) — driver-side

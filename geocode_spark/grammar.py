@@ -30,6 +30,8 @@ from __future__ import annotations
 
 import re
 
+from .steps import steps_sql
+
 # token -> canonical single letter
 DIRECTIONS: dict[str, str] = {
     "N": "N",
@@ -130,62 +132,59 @@ def _in_list_sql(tok_expr: str, keys) -> str:
     return f"({tok_expr} IN ({lst}))"
 
 
-def parse_street_duckdb_sql(cleansed_expr: str) -> str:
-    """DuckDB SELECT-fragment: emits a subquery-ready struct of parse columns.
+def parse_street_duckdb_sql(relation: str, cleansed: str) -> str:
+    """DuckDB relation: `relation` (a table name or a parenthesized query)
+    plus the PARSE_FIELDS columns parsed from its `cleansed` column.
 
-    Returns a string of comma-separated column expressions computing
-    addr_type, house, predir, street_name, stype, sufdir from `cleansed_expr`.
+    Staged (steps.py): each token expression is one named step, read by
+    name wherever it is used, and the `_g_` steps are dropped at the end.
     Generated from the SAME DIRECTIONS/STREET_TYPES tables as the Python
-    implementation. DuckDB lists are 1-indexed; list_slice is
-    inclusive on both ends.
+    implementation. DuckDB lists are 1-indexed; list_slice is inclusive on
+    both ends; `start` and the `last` bounds are 0-based token positions.
     """
-    up = f"upper(coalesce({cleansed_expr}, ''))"
-    toks = f"str_split({up}, ' ')"
-    # Use macros via a LATERAL-free approach: repeat expressions (DuckDB CSE's them).
-    n = f"len({toks})"
-    first = f"{toks}[1]"
-    pobox = f"regexp_extract({up}, '^P ?O BOX ([0-9]{{1,18}})\\z', 1)"
-    is_pobox = f"({pobox} <> '')"
-    valid = f"({n} >= 2 AND regexp_matches({first}, '^[0-9]{{1,6}}\\z'))"
+    g = "_g_"
     dirs = list(DIRECTIONS.keys())
     types = list(STREET_TYPES.keys())
-    has_pre = f"({valid} AND {n} >= 3 AND {_in_list_sql(f'{toks}[2]', dirs)})"
-    start = f"(CASE WHEN {has_pre} THEN 2 ELSE 1 END)"  # 0-based
-    last0 = f"({n} - 1)"
-    has_suf = (
-        f"({valid} AND ({last0} - {start} + 1) >= 2"
-        f" AND {_in_list_sql(f'{toks}[{last0} + 1]', dirs)})"
-    )
-    last1 = f"(CASE WHEN {has_suf} THEN {last0} - 1 ELSE {last0} END)"
-    has_type = (
-        f"({valid} AND ({last1} - {start} + 1) >= 2"
-        f" AND {_in_list_sql(f'{toks}[{last1} + 1]', types)})"
-    )
-    last2 = f"(CASE WHEN {has_type} THEN {last1} - 1 ELSE {last1} END)"
-    name = f"array_to_string(list_slice({toks}, {start} + 1, {last2} + 1), ' ')"
-
-    addr_type = (
-        f"CASE WHEN {is_pobox} THEN 'POBOX' WHEN {valid} THEN 'STREET'"
-        f" ELSE 'INVALID' END"
-    )
-    house = (
-        f"CASE WHEN {is_pobox} THEN CAST({pobox} AS BIGINT)"
-        f" WHEN {valid} THEN CAST({first} AS BIGINT) ELSE NULL END"
-    )
-    predir = (
-        f"CASE WHEN {has_pre} THEN {_case_map_sql(f'{toks}[2]', DIRECTIONS)}"
-        f" ELSE '' END"
-    )
-    street_name = f"CASE WHEN {valid} AND NOT {is_pobox} THEN {name} ELSE '' END"
-    stype = (
-        f"CASE WHEN {has_type} THEN"
-        f" {_case_map_sql(f'{toks}[{last1} + 1]', STREET_TYPES)} ELSE '' END"
-    )
-    sufdir = (
-        f"CASE WHEN {has_suf} THEN"
-        f" {_case_map_sql(f'{toks}[{last0} + 1]', DIRECTIONS)} ELSE '' END"
-    )
-    return (
-        f"{addr_type} AS addr_type, {house} AS house, {predir} AS predir,"
-        f" {street_name} AS street_name, {stype} AS stype, {sufdir} AS sufdir"
-    )
+    steps = [
+        (f"{g}up", f"upper(coalesce({cleansed}, ''))"),
+        (f"{g}toks", f"str_split({g}up, ' ')"),
+        (f"{g}n", f"len({g}toks)"),
+        (f"{g}pobox",
+         f"regexp_extract({g}up, '^P ?O BOX ([0-9]{{1,18}})\\z', 1)"),
+        (f"{g}is_pobox", f"({g}pobox <> '')"),
+        (f"{g}valid",
+         f"({g}n >= 2 AND regexp_matches({g}toks[1], '^[0-9]{{1,6}}\\z'))"),
+        (f"{g}has_pre",
+         f"({g}valid AND {g}n >= 3 AND {_in_list_sql(f'{g}toks[2]', dirs)})"),
+        (f"{g}start", f"(CASE WHEN {g}has_pre THEN 2 ELSE 1 END)"),
+        (f"{g}last0", f"({g}n - 1)"),
+        (f"{g}has_suf",
+         f"({g}valid AND ({g}last0 - {g}start + 1) >= 2"
+         f" AND {_in_list_sql(f'{g}toks[{g}last0 + 1]', dirs)})"),
+        (f"{g}last1",
+         f"(CASE WHEN {g}has_suf THEN {g}last0 - 1 ELSE {g}last0 END)"),
+        (f"{g}has_type",
+         f"({g}valid AND ({g}last1 - {g}start + 1) >= 2"
+         f" AND {_in_list_sql(f'{g}toks[{g}last1 + 1]', types)})"),
+        (f"{g}last2",
+         f"(CASE WHEN {g}has_type THEN {g}last1 - 1 ELSE {g}last1 END)"),
+        ("addr_type",
+         f"CASE WHEN {g}is_pobox THEN 'POBOX' WHEN {g}valid THEN 'STREET'"
+         f" ELSE 'INVALID' END"),
+        ("house",
+         f"CASE WHEN {g}is_pobox THEN CAST({g}pobox AS BIGINT)"
+         f" WHEN {g}valid THEN CAST({g}toks[1] AS BIGINT) ELSE NULL END"),
+        ("predir",
+         f"CASE WHEN {g}has_pre THEN"
+         f" {_case_map_sql(f'{g}toks[2]', DIRECTIONS)} ELSE '' END"),
+        ("street_name",
+         f"CASE WHEN {g}valid AND NOT {g}is_pobox THEN array_to_string("
+         f"list_slice({g}toks, {g}start + 1, {g}last2 + 1), ' ') ELSE '' END"),
+        ("stype",
+         f"CASE WHEN {g}has_type THEN"
+         f" {_case_map_sql(f'{g}toks[{g}last1 + 1]', STREET_TYPES)} ELSE '' END"),
+        ("sufdir",
+         f"CASE WHEN {g}has_suf THEN"
+         f" {_case_map_sql(f'{g}toks[{g}last0 + 1]', DIRECTIONS)} ELSE '' END"),
+    ]
+    return steps_sql(relation, steps, keep=PARSE_FIELDS)

@@ -420,23 +420,20 @@ def geocode_metrics(result: DataFrame) -> DataFrame:
     )
 
 
-def geocode_metrics_by_grid(result: DataFrame, salt_buckets: int = 16) -> DataFrame:
-    """Per-grid success metrics with a salted two-phase aggregation.
+def geocode_metrics_by_grid(result: DataFrame) -> DataFrame:
+    """Per-grid success count and score mass, in one groupBy.
 
-    The zone distribution is heavily skewed (SALT LAKE CITY dominates — the
-    north-rule hot-cell mandate), so a naive groupBy(addressGrid) funnels most
-    rows through one reducer. Phase 1 aggregates on (grid, salt) — spreading
-    the hot grid over `salt_buckets` reducers — phase 2 combines the tiny
-    partial table. Result is identical to the unsalted aggregation (the
-    DuckDB oracle IS the unsalted form).
+    The zone distribution is skewed (SALT LAKE CITY dominates), but partial
+    aggregation already combines the hot grid map-side, to one row per map
+    task, so a salted second phase would only add an exchange. The contract
+    query keeps its name, `metrics_by_grid_salted`, from when it ran that
+    salted phase; its DuckDB oracle is the same groupBy.
     """
-    salted = (
+    return (
         result.filter(F.col("message").isNull())
-        .withColumn("_salt", F.pmod(F.hash("primary_key"), F.lit(salt_buckets)))
-        .groupBy("addressGrid", "_salt")
-        .agg(F.count("*").alias("_n"), F.sum("score").alias("_s"))
-    )
-    return salted.groupBy("addressGrid").agg(
-        F.sum("_n").cast("bigint").alias("n_success"),
-        F.sum("_s").cast("bigint").alias("sum_score"),
+        .groupBy("addressGrid")
+        .agg(
+            F.count("*").cast("bigint").alias("n_success"),
+            F.sum("score").cast("bigint").alias("sum_score"),
+        )
     )

@@ -359,28 +359,26 @@ def assign_tiles(points: DataFrame, tile_size: float = DEFAULT_TILE) -> DataFram
     )
 
 
-def tile_rollup(points: DataFrame, tile_size: float = DEFAULT_TILE,
-                salt_buckets: int = 16) -> DataFrame:
-    """J9 raster->vector rollup: per-tile stats, salted two-phase aggregation.
+def tile_rollup(points: DataFrame, tile_size: float = DEFAULT_TILE) -> DataFrame:
+    """J9 raster->vector rollup: per-tile point count and score mass.
 
-    Hot grids (SALT LAKE CITY) concentrate points into few tiles; phase 1
-    aggregates on (tile, salt) so the hot tiles spread over `salt_buckets`
-    reducers, phase 2 combines the small partial table. Output is identical
-    to the unsalted groupBy (the DuckDB oracle IS the unsalted form)."""
-    t = assign_tiles(points, tile_size)
-    partial = (
-        t.withColumn("_salt", F.pmod(F.hash("primary_key"), F.lit(salt_buckets)))
-        .groupBy("tile_x", "tile_y", "_salt")
-        .agg(F.count("*").alias("_n"), F.sum("score").alias("_s"))
-    )
-    return partial.groupBy("tile_x", "tile_y").agg(
-        F.sum("_n").cast("bigint").alias("n_points"),
-        F.sum("_s").cast("bigint").alias("sum_score"),
+    One groupBy. Hot grids (SALT LAKE CITY) concentrate points into few
+    tiles, but partial aggregation already combines a hot tile map-side, to
+    one row per map task, so a salted second phase would only add an
+    exchange. The contract query keeps its name, `tile_rollup_salted`, from
+    when it ran that salted phase; its oracle is the same groupBy."""
+    return (
+        assign_tiles(points, tile_size)
+        .groupBy("tile_x", "tile_y")
+        .agg(
+            F.count("*").cast("bigint").alias("n_points"),
+            F.sum("score").cast("bigint").alias("sum_score"),
+        )
     )
 
 
 def tile_rollup_sql(source_sql: str, tile_size: float = DEFAULT_TILE) -> str:
-    """DuckDB oracle for tile_rollup (unsalted — the semantic ground truth).
+    """DuckDB oracle for tile_rollup.
 
     source_sql: relation with (x, y, score)."""
     return f"""
@@ -541,9 +539,10 @@ def geohash_sql(lon: str, lat: str, dialect: str,
 def geohash_encode(points: DataFrame,
                    precision: int = GEOHASH_PRECISION) -> DataFrame:
     """(primary_key, lon, lat, geohash) for UTM points (x, y)."""
-    from .projection import stage_utm_to_wgs84
+    from ..steps import with_steps
+    from .projection import inverse_steps
 
-    staged = stage_utm_to_wgs84(points, "x", "y")
+    staged = with_steps(points, inverse_steps(), keep=("lon", "lat"))
     return staged.select(
         "primary_key",
         "lon",
@@ -555,15 +554,14 @@ def geohash_encode(points: DataFrame,
 def geohash_encode_sql(source_sql: str,
                        precision: int = GEOHASH_PRECISION) -> str:
     """DuckDB oracle: same projection formula, same integer geohash."""
-    from .projection import utm_to_wgs84_sql
+    from ..steps import steps_sql
+    from .projection import inverse_steps
 
-    ll = utm_to_wgs84_sql("x", "y")
+    ll = steps_sql(f"({source_sql})", inverse_steps(), keep=("lon", "lat"))
     return f"""
-WITH pts AS ({source_sql}),
-ll AS (SELECT primary_key, {ll['lon']} AS lon, {ll['lat']} AS lat FROM pts)
 SELECT primary_key, lon, lat,
        {geohash_sql('lon', 'lat', 'duckdb', precision)} AS geohash
-FROM ll
+FROM {ll}
 """
 
 
@@ -603,13 +601,14 @@ def haversine_sql(lon1: str, lat1: str, lon2: str, lat2: str) -> str:
 def nearest_hub(points: DataFrame, hubs=DEFAULT_HUBS) -> DataFrame:
     """(primary_key, hub_id, dist_m): the great-circle-nearest hub per
     geocoded point, ties broken by hub_id."""
-    from .projection import stage_utm_to_wgs84
+    from ..steps import with_steps
+    from .projection import inverse_steps
 
     spark = points.sparkSession
     hub_df = spark.createDataFrame(
         list(hubs), "hub_id bigint, hub_lon double, hub_lat double"
     )
-    ll = stage_utm_to_wgs84(points, "x", "y").select(
+    ll = with_steps(points, inverse_steps(), keep=("lon", "lat")).select(
         "primary_key", "lon", "lat"
     )
     paired = ll.join(F.broadcast(hub_df)).withColumn(
@@ -630,9 +629,10 @@ def nearest_hub_sql(source_sql: str, hubs=DEFAULT_HUBS) -> str:
     """DuckDB oracle: same projection, same haversine, same argmin.
 
     source_sql: relation with (primary_key, x, y)."""
-    from .projection import utm_to_wgs84_sql
+    from ..steps import steps_sql
+    from .projection import inverse_steps
 
-    ll = utm_to_wgs84_sql("x", "y")
+    ll = steps_sql(f"({source_sql})", inverse_steps(), keep=("lon", "lat"))
     hub_rows = " UNION ALL ".join(
         f"SELECT CAST({h} AS BIGINT) AS hub_id, CAST({lo!r} AS DOUBLE)"
         f" AS hub_lon, CAST({la!r} AS DOUBLE) AS hub_lat"
@@ -640,8 +640,7 @@ def nearest_hub_sql(source_sql: str, hubs=DEFAULT_HUBS) -> str:
     )
     d = haversine_sql("lon", "lat", "hub_lon", "hub_lat")
     return f"""
-WITH pts AS ({source_sql}),
-ll AS (SELECT primary_key, {ll['lon']} AS lon, {ll['lat']} AS lat FROM pts),
+WITH ll AS (SELECT primary_key, lon, lat FROM {ll}),
 hubs AS ({hub_rows}),
 paired AS (
   SELECT primary_key, hub_id, {d} AS dist_m
@@ -1622,10 +1621,10 @@ GROUP BY l.component_id"""
 # product. Each qualifying pair (a < b) is produced exactly once: a's probe
 # set covers b's unique home cell iff the pair is within one cell offset,
 # which an R-sized grid guarantees for any pair within R. The join key's
-# skew is bounded by the densest R-cell; at 100 TB a hot cell would be
-# salted exactly like tile_rollup_salted. All arithmetic is integer
-# millimeters (coordinates are positive UTM meters, so truncating `div`
-# equals DuckDB's floor `//`), so the oracle hash-compares bitwise.
+# skew is bounded by the densest R-cell; at 100 TB a hot cell would need
+# salting. All arithmetic is integer millimeters (coordinates are positive
+# UTM meters, so truncating `div` equals DuckDB's floor `//`), so the
+# oracle hash-compares bitwise.
 RADIUS_M = 500.0
 
 

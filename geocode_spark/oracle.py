@@ -13,6 +13,7 @@ read_parquet() so both engines see byte-identical inputs.
 
 from __future__ import annotations
 
+from . import DEFAULT_ACCEPT_SCORE
 from .cleansing import cleanse_street_sql, cleanse_zone_sql
 from .grammar import DIRECTION_WORDS, parse_street_duckdb_sql
 from .operators.geocode import (
@@ -89,14 +90,13 @@ input AS (
   FROM {source_sql}
 ),
 parsed AS (
-  SELECT *, upper(cleansed_zone) AS zone_key,
-         {parse_street_duckdb_sql('cleansed_street')}
-  FROM input
+  SELECT *, upper(cleansed_zone) AS zone_key
+  FROM {parse_street_duckdb_sql('input', 'cleansed_street')}
 )"""
 
 
 def candidates_sql(fix: str, locators: str = "all", pobox: bool = False,
-                   accept_score: int = 70) -> str:
+                   accept_score: int = DEFAULT_ACCEPT_SCORE) -> str:
     """CTE text for scored candidates (named `cands`). `fix` = fixture dir."""
     parts = []
     if locators in ("all", "addressPoints"):
@@ -166,7 +166,8 @@ cands AS (
 
 
 def geocode_oracle_sql(fixture_dir: str, locators: str = "all",
-                       pobox: bool = False, accept_score: int = 70,
+                       pobox: bool = False,
+                       accept_score: int = DEFAULT_ACCEPT_SCORE,
                        source_sql: str | None = None) -> str:
     """Full-pipeline oracle: the 11-column contract.
 
@@ -246,7 +247,7 @@ FROM ({inner})
 
 
 def metrics_by_grid_oracle_sql(fixture_dir: str, **kw) -> str:
-    """Per-grid success metrics — oracle for the salted two-phase aggregation."""
+    """Per-grid success metrics — oracle for geocode_metrics_by_grid."""
     inner = geocode_oracle_sql(fixture_dir, **kw)
     return f"""
 SELECT addressGrid AS addressGrid,

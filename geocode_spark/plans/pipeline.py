@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from .. import DEFAULT_ACCEPT_SCORE
 from ..extraction import _extract_parse_batch
 from ..operators.geocode import locator_index, pack_locators
 from ..operators.match import MATCH_FIELDS, match
@@ -58,7 +59,7 @@ def geocode_pages(
     locator_tables: dict,
     locators: str = "all",
     pobox: bool = True,
-    accept_score: int = 70,
+    accept_score: int = DEFAULT_ACCEPT_SCORE,
     progress_acc=None,
 ) -> DataFrame:
     """Flagship pipeline: web pages in, 11-column geocode results out.

@@ -18,11 +18,11 @@ never touches individual rows, so the Spark-native analog has two halves:
   accumulator and emits one "Total requests: N" line per crossed `every`-row
   boundary, with elapsed time and running rate.
 - **status block** — failure rate and average score exist only after the
-  locator join, which runs JVM-side (no Python hook). They are produced
-  per committed batch by the ledger metrics (batching._ledger_metrics,
-  A1-A3), and ``log_status_lines`` renders the reference's exact
-  three-line block from running totals — emitted after every batch commit
-  and at job end (A5 parity, geocode.py:260-261).
+  match (the same Arrow stage, whose accumulator counts rows, not
+  outcomes). They are produced per committed batch by the ledger metrics
+  (batching._ledger_metrics, A1-A3), and ``log_status_lines`` renders the
+  reference's exact three-line block from running totals — emitted after
+  every batch commit and at job end (A5 parity, geocode.py:260-261).
 
 The kernel hook must capture the accumulator in the UDF **closure**
 (``counting_pandas_udf``): forked Python workers re-import engine modules,

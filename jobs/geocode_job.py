@@ -24,6 +24,8 @@ import json
 import sys
 import time
 
+from geocode_spark import DEFAULT_ACCEPT_SCORE
+
 
 def parse_args(argv=None):
     p = argparse.ArgumentParser(description=__doc__)
@@ -49,7 +51,7 @@ def parse_args(argv=None):
     p.add_argument("--locators", default="all",
                    choices=["all", "addressPoints", "roadCenterlines"])
     p.add_argument("--pobox", action="store_true")
-    p.add_argument("--accept-score", type=int, default=70)
+    p.add_argument("--accept-score", type=int, default=DEFAULT_ACCEPT_SCORE)
     p.add_argument("--ignore-failures", action="store_true",
                    help="disable the 25-row health probe abort (F1)")
     p.add_argument("--probe-count", type=int, default=25)

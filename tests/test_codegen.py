@@ -6,7 +6,8 @@ generated Java exceeded janino's 64 KB method limit: Spark logged
 `ERROR CodeGenerator: Failed to compile the generated Java code` and fell
 back to interpreted evaluation — correct results, but interpreted per-row
 cost at 100x scale. Both families now stage their subterms as real columns
-(projection.stage_utm_to_wgs84, multimodal._dhash_sample_array).
+(projection.inverse_steps / forward_steps run by steps.with_steps,
+multimodal._dhash_sample_array).
 
 The check runs in a SUBPROCESS: CodeGenerator caches compiled (and failed)
 source per generated text, so within a long-lived test session a prior

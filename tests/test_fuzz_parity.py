@@ -126,7 +126,8 @@ def test_parse_street_spark_duckdb_parity(spark, batch):
         con.register("t", pd.DataFrame(
             {"i": range(len(cleansed)),
              "s": pd.array(cleansed, dtype="string")}))
-        got_duck = con.sql(f"SELECT {parse_street_duckdb_sql('s')} FROM t"
+        got_duck = con.sql(f"SELECT {', '.join(PARSE_FIELDS)}"
+                           f" FROM {parse_street_duckdb_sql('t', 's')}"
                            " ORDER BY i").fetchall()
     finally:
         con.close()
@@ -146,9 +147,12 @@ COORD = st.tuples(
 )
 COORD_BATCH = st.lists(COORD, min_size=1, max_size=40)
 
-# the TM expression tree is ~thousands of nodes; Catalyst re-analyzes it per
-# hypothesis example, so the numeric tests use few, wide examples
+# few, wide examples: each one is a Spark job and a DuckDB query
 _NUMERIC_FUZZ_SETTINGS = {**_FUZZ_SETTINGS, "max_examples": 4}
+
+# forward targets: the native zone, its neighbour, WGS84 north and south
+# (10,000,000 m false northing) and web mercator
+_FORWARD_WKIDS = (26912, 26913, 32612, 32712, 3857)
 
 
 def _coord_frames(spark, pts):
@@ -161,30 +165,33 @@ def _coord_frames(spark, pts):
 @given(COORD_BATCH)
 @settings(**_NUMERIC_FUZZ_SETTINGS)
 def test_projection_inverse_forward_parity_fuzz(spark, pts):
-    """The transverse-Mercator inverse+forward chain must produce identical
-    rounded values in Spark (java.lang.Math) and DuckDB (libm) over random
-    coordinates — the rounding at the output absorbs any last-ulp libm
-    divergence, and the shared generated SQL guarantees the same op order."""
-    from geocode_spark.operators.projection import (
-        utm_to_wgs84_sql,
-        wgs84_to_utm_sql,
-    )
+    """The transverse-Mercator inverse, then the forward to every output
+    wkid in _FORWARD_WKIDS, must produce identical rounded values in Spark
+    (java.lang.Math) and DuckDB (libm) over random coordinates — the
+    rounding at the output absorbs any last-ulp libm divergence, and the
+    one shared step list guarantees the same op order."""
+    from geocode_spark.operators.projection import forward_steps, inverse_steps
+    from geocode_spark.steps import steps_sql, with_steps
 
-    ll = utm_to_wgs84_sql("x", "y")
-    rt = wgs84_to_utm_sql(ll["lon"], ll["lat"])
-    exprs = {"lon": ll["lon"], "lat": ll["lat"], "rx": rt["x"], "ry": rt["y"]}
-    sel = ", ".join(f"{e} AS {a}" for a, e in exprs.items())
     pdf, sdf = _coord_frames(spark, pts)
-    got_spark = sdf.selectExpr(
-        "i", *[f"{e} AS {a}" for a, e in exprs.items()]
-    ).toPandas()
+    cols = ["lon", "lat"]
+    sdf = with_steps(sdf, inverse_steps(), keep=("lon", "lat"))
+    rel = steps_sql("t", inverse_steps(), keep=("lon", "lat"))
+    for w in _FORWARD_WKIDS:
+        out = (f"x_{w}", f"y_{w}")
+        fw = forward_steps(w, x=out[0], y=out[1])
+        sdf = with_steps(sdf, fw, keep=out)
+        rel = steps_sql(rel, fw, keep=out)
+        cols += out
+    got_spark = sdf.select("i", *cols).toPandas()
     con = duckdb.connect()
     try:
         con.register("t", pdf)
-        got_duck = con.sql(f"SELECT i, {sel} FROM t ORDER BY i").df()
+        got_duck = con.sql(f"SELECT i, {', '.join(cols)} FROM {rel}"
+                           " ORDER BY i").df()
     finally:
         con.close()
-    for c in ("lon", "lat", "rx", "ry"):
+    for c in cols:
         assert got_spark[c].tolist() == got_duck[c].tolist(), c
 
 

@@ -77,7 +77,8 @@ def test_duckdb_parse_matches_py():
     con = duckdb.connect()
     con.register("t", pd.DataFrame({"cs": vals}))
     rows = con.sql(
-        f"SELECT cs, {parse_street_duckdb_sql('cs')} FROM t"
+        f"SELECT cs, {', '.join(PARSE_FIELDS)}"
+        f" FROM {parse_street_duckdb_sql('t', 'cs')}"
     ).fetchall()
     for cs, *fields in rows:
         want = parse_street_py(cs)

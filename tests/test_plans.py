@@ -356,3 +356,50 @@ def test_semdedup_single_exchange_pruned_scan(spark):
         for s in scans
     )
     assert "FlatMapGroupsInPandas" in plan or "ArrowEvalPython" in plan
+
+
+def test_hot_key_rollups_single_exchange(spark, fixtures_dir):
+    """Hot keys need no salt: with every point in one tile and every match
+    in one grid, tile_rollup and geocode_metrics_by_grid each equal their
+    DuckDB oracle and plan exactly one Exchange (partial aggregation
+    combines the hot key map-side)."""
+    import duckdb
+    import pandas as pd
+    from compare_util import assert_frames_match, duck_to_pdf
+
+    from geocode_spark.operators.geocode import geocode, geocode_metrics_by_grid
+    from geocode_spark.operators.spatial import tile_rollup, tile_rollup_sql
+    from geocode_spark.oracle import metrics_by_grid_oracle_sql
+    from geocode_spark.plans.pipeline import load_locators
+
+    pts = pd.DataFrame({
+        "primary_key": [f"p{i}" for i in range(2000)],
+        "x": [420_000.0 + (i * 7) % 997 for i in range(2000)],
+        "y": [4_500_000.0 + (i * 13) % 991 for i in range(2000)],
+        "score": [70 + i % 31 for i in range(2000)],
+    })
+    tiles = tile_rollup(spark.createDataFrame(
+        pts, "primary_key string, x double, y double, score bigint"))
+    assert _plan(tiles).count("Exchange") == 1
+    got = tiles.toPandas()
+    assert len(got) == 1
+    con = duckdb.connect()
+    try:
+        con.register("pts", pts)
+        want = con.sql(tile_rollup_sql("SELECT * FROM pts")).df()
+    finally:
+        con.close()
+    assert_frames_match(got, want, label="tile_rollup hot tile")
+
+    hot = "upper(zone) = 'SALT LAKE CITY'"
+    src = spark.read.parquet(f"{fixtures_dir}/addresses.parquet").where(hot)
+    grids = geocode_metrics_by_grid(
+        geocode(src, pobox=True, **load_locators(spark, fixtures_dir)))
+    assert _plan(grids).count("Exchange") == 1
+    got = grids.toPandas()
+    assert len(got) == 1 and got["n_success"][0] > 1
+    want = duck_to_pdf(metrics_by_grid_oracle_sql(
+        fixtures_dir, pobox=True,
+        source_sql=f"(SELECT * FROM read_parquet("
+                   f"'{fixtures_dir}/addresses.parquet') WHERE {hot})"))
+    assert_frames_match(got, want, label="metrics_by_grid hot grid")

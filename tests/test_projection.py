@@ -1,54 +1,55 @@
-"""J7 spatial-reference tests: UTM 12N (26912) <-> WGS84 from-scratch math."""
+"""J7 spatial-reference tests: UTM 12N (26912) <-> WGS84 from-scratch math.
+
+The formulas are step lists (projection.inverse_steps / forward_steps) that
+both engines run staged; the anchors below check the math itself."""
 
 import duckdb
 import pytest
 
 from geocode_spark.operators.projection import (
+    forward_steps,
+    inverse_steps,
     reproject_result,
-    utm_to_wgs84_sql,
-    wgs84_to_utm_sql,
 )
+from geocode_spark.steps import steps_sql, with_steps
 
 
 def test_forward_anchor_central_meridian():
     # equator on the zone-12 central meridian -> exactly (false easting, 0)
-    fw = wgs84_to_utm_sql("lon", "lat")
-    row = duckdb.sql(
-        f"SELECT {fw['x']} AS x, {fw['y']} AS y FROM (VALUES (-111.0, 0.0)) t(lon,lat)"
-    ).fetchone()
-    assert row == (500000.0, 0.0)
+    fw = steps_sql("(VALUES (-111.0, 0.0)) t(lon, lat)", forward_steps(26912),
+                   keep=("x", "y"))
+    assert duckdb.sql(f"SELECT x, y FROM {fw}").fetchone() == (500000.0, 0.0)
 
 
 def test_roundtrip_exact_over_utah_grid():
-    fw = wgs84_to_utm_sql("lon", "lat")
-    inv = utm_to_wgs84_sql("x", "y")
+    steps = forward_steps(26912) + inverse_steps(lon="rlon", lat="rlat")
+    staged = steps_sql("pts", steps, keep=("rlon", "rlat"))
     q = f"""
     WITH pts AS (
       SELECT -114.0 + 0.1*i AS lon, 37.0 + 0.05*j AS lat
       FROM range(0,30) t1(i), range(0,40) t2(j)
-    ), utm AS (SELECT lon, lat, {fw['x']} AS x, {fw['y']} AS y FROM pts)
-    SELECT max(abs(lon - {inv['lon']})) AS dlon,
-           max(abs(lat - {inv['lat']})) AS dlat FROM utm"""
+    )
+    SELECT max(abs(lon - rlon)) AS dlon, max(abs(lat - rlat)) AS dlat
+    FROM {staged}"""
     dlon, dlat = duckdb.sql(q).fetchone()
     # inverse(forward(p)) == p to the rounding precision (1e-6 deg ~ 0.1 m)
     assert dlon == 0.0 and dlat == 0.0
 
 
 def test_spark_matches_duckdb_formula(spark):
-    """Same SQL string through Catalyst and DuckDB -> same rounded values."""
-    from pyspark.sql import functions as F
-
-    inv = utm_to_wgs84_sql("x", "y")
+    """The same inverse steps through Catalyst and DuckDB -> same rounded
+    values."""
+    keep = ("lon", "lat")
     pts = [(425000.0 + 997.0 * i, 4500000.0 + 1471.0 * i) for i in range(200)]
     sdf = (
-        spark.createDataFrame(pts, "x double, y double")
-        .select(F.expr(inv["lon"]).alias("lon"), F.expr(inv["lat"]).alias("lat"))
+        with_steps(spark.createDataFrame(pts, "x double, y double"),
+                   inverse_steps(), keep)
+        .select(*keep)
         .collect()
     )
     vals = ", ".join(f"({x!r}, {y!r})" for x, y in pts)
-    ddf = duckdb.sql(
-        f"SELECT {inv['lon']} AS lon, {inv['lat']} AS lat FROM (VALUES {vals}) t(x,y)"
-    ).fetchall()
+    staged = steps_sql(f"(VALUES {vals}) t(x, y)", inverse_steps(), keep)
+    ddf = duckdb.sql(f"SELECT lon, lat FROM {staged}").fetchall()
     assert [(r["lon"], r["lat"]) for r in sdf] == [tuple(r) for r in ddf]
 
 
@@ -98,12 +99,9 @@ def test_web_mercator_anchor():
     # equator at lon -111 -> x = R*radians(-111), y = 0
     import math
 
-    from geocode_spark.operators.projection import web_mercator_sql
-
-    wm = web_mercator_sql("lon", "lat")
-    x, y = duckdb.sql(
-        f"SELECT {wm['x']} AS x, {wm['y']} AS y FROM (VALUES (-111.0, 0.0)) t(lon,lat)"
-    ).fetchone()
+    wm = steps_sql("(VALUES (-111.0, 0.0)) t(lon, lat)", forward_steps(3857),
+                   keep=("x", "y"))
+    x, y = duckdb.sql(f"SELECT x, y FROM {wm}").fetchone()
     assert abs(x - 6378137.0 * math.radians(-111.0)) < 1e-3
     assert y == 0.0
 
