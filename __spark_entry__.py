@@ -188,7 +188,9 @@ def _success_points(spark, sf_dir):
     Persisted per (session, sf_dir): six downstream spatial queries share
     this subplan, and a real pipeline materializes the geocode result once
     (Iceberg table / cached view) rather than re-matching per query. The
-    relation is small (successful matches only, 4 columns)."""
+    persisted relation is the result's five columns, failures included;
+    the matches are selected from it, so the filter cannot reach the
+    geocode stage (see operators.geocode.geocode)."""
     from pyspark.sql import functions as F
 
     key = (spark, sf_dir)
@@ -196,12 +198,11 @@ def _success_points(spark, sf_dir):
     if df is None:
         df = (
             _q_geocode_all(spark, sf_dir)
-            .filter(F.col("message").isNull())
-            .select("primary_key", "x", "y", "score")
+            .select("primary_key", "x", "y", "score", "message")
             .persist()
         )
         _SUCCESS_CACHE[key] = df
-    return df
+    return df.filter(F.col("message").isNull()).drop("message")
 
 
 def _q_cell_encode(spark, sf_dir):

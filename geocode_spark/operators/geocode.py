@@ -294,6 +294,12 @@ def geocode(
     geocode.py:26,128). `spatial_reference` re-expresses output x/y (J7,
     geocode.py:25,115,204): 26912 native or 4326 via the from-scratch
     transverse-Mercator inverse.
+
+    Select result rows by a result column (`message IS NULL`) inside an
+    aggregate or over a materialized result, not with a Filter right over
+    this one: the optimizer pushes such a Filter below the stage's
+    projection with the kernel inlined into its condition, and the plan
+    then runs the kernel twice per row, in two ArrowEvalPython stages.
     """
     from ..extraction import cleanse_parse_batch
 
@@ -371,15 +377,17 @@ def metrics_rollup(result: DataFrame) -> DataFrame:
     grouping_id distinguishes subtotal NULLs from data NULLs — identical
     semantics to ANSI GROUP BY ROLLUP, which the DuckDB oracle uses
     directly. Scores aggregate as exact integer sums (scores are whole
-    points), so every cell hash-matches."""
-    matched = result.filter(F.col("message").isNull())
-    return matched.rollup("addressGrid", "locator").agg(
+    points), so every cell hash-matches. Matches are selected inside the
+    aggregate (see geocode()), and a cell without one is dropped."""
+    ok = F.col("message").isNull()
+    score = F.when(ok, F.col("score").cast("bigint"))
+    return result.rollup("addressGrid", "locator").agg(
         F.grouping_id().cast("bigint").alias("grouping_id"),
-        F.count("*").cast("bigint").alias("n"),
-        F.sum(F.col("score").cast("bigint")).alias("sum_score"),
-        F.min(F.col("score").cast("bigint")).alias("min_score"),
-        F.max(F.col("score").cast("bigint")).alias("max_score"),
-    )
+        F.count(F.when(ok, 1)).cast("bigint").alias("n"),
+        F.sum(score).alias("sum_score"),
+        F.min(score).alias("min_score"),
+        F.max(score).alias("max_score"),
+    ).filter(F.col("n") > 0)
 
 
 def metrics_rollup_oracle_sql(result_sql: str) -> str:
@@ -427,13 +435,16 @@ def geocode_metrics_by_grid(result: DataFrame) -> DataFrame:
     aggregation already combines the hot grid map-side, to one row per map
     task, so a salted second phase would only add an exchange. The contract
     query keeps its name, `metrics_by_grid_salted`, from when it ran that
-    salted phase; its DuckDB oracle is the same groupBy.
+    salted phase; its DuckDB oracle is the same groupBy. Matches are
+    selected inside the aggregate (see geocode()), and a grid without one
+    is dropped.
     """
+    ok = F.col("message").isNull()
     return (
-        result.filter(F.col("message").isNull())
-        .groupBy("addressGrid")
+        result.groupBy("addressGrid")
         .agg(
-            F.count("*").cast("bigint").alias("n_success"),
-            F.sum("score").cast("bigint").alias("sum_score"),
+            F.count(F.when(ok, 1)).cast("bigint").alias("n_success"),
+            F.sum(F.when(ok, F.col("score"))).cast("bigint").alias("sum_score"),
         )
+        .filter(F.col("n_success") > 0)
     )

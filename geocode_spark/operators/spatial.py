@@ -14,9 +14,9 @@ arithmetic that runs identically in Spark SQL and DuckDB:
   cell = part1by1(ix) | part1by1(iy) << 1           interleave (magic-number
                                                      bit spread, 4 ops/axis)
 
-Every formula here is generated ONCE as a SQL string and rendered for both
-dialects (Spark `shiftleft()` vs DuckDB `<<`), so the Spark plan and the
-DuckDB oracle execute the exact same IEEE-754 / integer operations — results
+Every formula here is generated ONCE as a SQL string that both engines parse
+(the shifts are the `<<` / `>>` operators), so the Spark plan and the DuckDB
+oracle execute the exact same IEEE-754 / integer operations — results
 hash-compare bitwise.
 
 Scale notes (100 TB):
@@ -36,6 +36,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..steps import Steps
+
 # Bounding box covering the fixture lattice (UTM 12N meters) with margin.
 DEFAULT_BBOX = (370000.0, 4390000.0, 440000.0, 4460000.0)  # x0, y0, x1, y1
 DEFAULT_RES = 6  # 2^6 = 64 cells/axis -> ~1094 m cells over the 70 km bbox
@@ -52,18 +54,17 @@ _SPREAD_MASKS = ((8, 0x00FF00FF), (4, 0x0F0F0F0F), (2, 0x33333333), (1, 0x555555
 
 
 # ----------------------------------------------------------- formula builders
-def _shl(expr: str, n: int, dialect: str) -> str:
-    if dialect == "spark":
-        return f"shiftleft({expr}, {n})"
-    return f"({expr} << {n})"
-
-
-def part1by1_sql(v: str, dialect: str) -> str:
-    """Spread the low 16 bits of `v` into even bit positions (Morton spread)."""
-    e = f"(CAST({v} AS BIGINT) & 65535)"
-    for n, mask in _SPREAD_MASKS:
-        e = f"(({e} | {_shl(e, n, dialect)}) & {mask})"
+def _spread(e: str, masks) -> str:
+    """Magic-number bit spread of `e` to even positions, one (shift, mask)
+    step at a time."""
+    for n, mask in masks:
+        e = f"(({e} | ({e} << {n})) & {mask})"
     return e
+
+
+def part1by1_sql(v: str) -> str:
+    """Spread the low 16 bits of `v` into even bit positions (Morton spread)."""
+    return _spread(f"(CAST({v} AS BIGINT) & 65535)", _SPREAD_MASKS)
 
 
 def quantize_sql(c: str, lo: float, span: float, n: int) -> str:
@@ -74,9 +75,9 @@ def quantize_sql(c: str, lo: float, span: float, n: int) -> str:
     )
 
 
-def cell_sql(ix: str, iy: str, dialect: str) -> str:
+def cell_sql(ix: str, iy: str) -> str:
     """Z-order cell id from quantized integer coordinates."""
-    return f"({part1by1_sql(ix, dialect)} | {_shl(part1by1_sql(iy, dialect), 1, dialect)})"
+    return f"({part1by1_sql(ix)} | ({part1by1_sql(iy)} << 1))"
 
 
 def quantize_exprs(x: str, y: str, res: int = DEFAULT_RES,
@@ -94,7 +95,7 @@ def cell_encode_cols(x: str = "x", y: str = "y", res: int = DEFAULT_RES,
     return {
         "ix": F.expr(ix),
         "iy": F.expr(iy),
-        "cell_id": F.expr(cell_sql(ix, iy, "spark")),
+        "cell_id": F.expr(cell_sql(ix, iy)),
     }
 
 
@@ -102,7 +103,7 @@ def cell_encode_select_sql(x: str = "x", y: str = "y", res: int = DEFAULT_RES,
                            bbox=DEFAULT_BBOX) -> str:
     """DuckDB select-list fragment mirroring cell_encode_cols bit-for-bit."""
     ix, iy = quantize_exprs(x, y, res, bbox)
-    return f"{ix} AS ix, {iy} AS iy, {cell_sql(ix, iy, 'duckdb')} AS cell_id"
+    return f"{ix} AS ix, {iy} AS iy, {cell_sql(ix, iy)} AS cell_id"
 
 
 def with_cell(df: DataFrame, x: str = "x", y: str = "y", res: int = DEFAULT_RES,
@@ -492,23 +493,9 @@ _SPREAD64 = (
 )
 
 
-def _shr(expr: str, n: int, dialect: str) -> str:
-    if dialect == "spark":
-        return f"shiftright({expr}, {n})"
-    return f"({expr} >> {n})"
-
-
-def part1by1_64_sql(v: str, dialect: str) -> str:
-    """Spread an up-to-32-bit integer's bits to even positions (64-bit)."""
-    out = f"({v})"
-    for n, mask in _SPREAD64:
-        out = f"(({out} | {_shl(out, n, dialect)}) & {mask})"
-    return out
-
-
-def geohash_sql(lon: str, lat: str, dialect: str,
-                precision: int = GEOHASH_PRECISION) -> str:
-    """Base-32 geohash string expression from lon/lat degree expressions.
+def geohash_steps(precision: int = GEOHASH_PRECISION) -> Steps:
+    """Steps from the `lon`/`lat` degree columns to the base-32 `geohash`;
+    the `_gh_` steps are temporaries.
 
     Quantization is the textbook bisection unrolled: bit k (MSB-first) of
     the lon bit-stream is bit k of floor((lon+180)/360 * 2^n_lon) — the
@@ -518,22 +505,22 @@ def geohash_sql(lon: str, lat: str, dialect: str,
     nbits = 5 * precision
     n_lon = (nbits + 1) // 2
     n_lat = nbits // 2
-    lonq = (f"least(CAST({(1 << n_lon) - 1} AS BIGINT), greatest(CAST(0 AS BIGINT),"
-            f" CAST(floor((({lon}) + 180.0) / 360.0 * {1 << n_lon}) AS BIGINT)))")
-    latq = (f"least(CAST({(1 << n_lat) - 1} AS BIGINT), greatest(CAST(0 AS BIGINT),"
-            f" CAST(floor((({lat}) + 90.0) / 180.0 * {1 << n_lat}) AS BIGINT)))")
-    # lon occupies even bit positions from the LSB end iff nbits is odd
-    # (precision 7 -> 35 bits: positions 34,32,..,0 are lon). With n_lon =
-    # n_lat + 1, combined = spread(lonq) | spread(latq) << 1.
-    combined = (f"({part1by1_64_sql(lonq, dialect)}"
-                f" | {_shl(part1by1_64_sql(latq, dialect), 1, dialect)})")
-    chars = [
+    t = "_gh_"
+    # the MSB of the bit-stream is lon's, so lon takes the even positions
+    # (from the LSB end) when nbits is odd and the odd ones when it is even
+    even, odd = (f"{t}lonq", f"{t}latq") if nbits % 2 else (f"{t}latq", f"{t}lonq")
+    chars = ", ".join(
         f"substr('{_GEOHASH32}',"
-        f" CAST(({_shr(combined, nbits - 5 * (k + 1), dialect)} & 31)"
-        f" + 1 AS INT), 1)"
+        f" CAST((({t}combined >> {nbits - 5 * (k + 1)}) & 31) + 1 AS INT), 1)"
         for k in range(precision)
+    )
+    return [
+        (f"{t}lonq", quantize_sql("lon", -180.0, 360.0, 1 << n_lon)),
+        (f"{t}latq", quantize_sql("lat", -90.0, 180.0, 1 << n_lat)),
+        (f"{t}combined",
+         f"({_spread(even, _SPREAD64)} | ({_spread(odd, _SPREAD64)} << 1))"),
+        ("geohash", f"concat({chars})"),
     ]
-    return "concat(" + ", ".join(chars) + ")"
 
 
 def geohash_encode(points: DataFrame,
@@ -542,27 +529,21 @@ def geohash_encode(points: DataFrame,
     from ..steps import with_steps
     from .projection import inverse_steps
 
-    staged = with_steps(points, inverse_steps(), keep=("lon", "lat"))
-    return staged.select(
-        "primary_key",
-        "lon",
-        "lat",
-        F.expr(geohash_sql("lon", "lat", "spark", precision)).alias("geohash"),
-    )
+    staged = with_steps(points, inverse_steps() + geohash_steps(precision),
+                        keep=("lon", "lat", "geohash"))
+    return staged.select("primary_key", "lon", "lat", "geohash")
 
 
 def geohash_encode_sql(source_sql: str,
                        precision: int = GEOHASH_PRECISION) -> str:
-    """DuckDB oracle: same projection formula, same integer geohash."""
+    """DuckDB oracle: the same steps, run staged."""
     from ..steps import steps_sql
     from .projection import inverse_steps
 
-    ll = steps_sql(f"({source_sql})", inverse_steps(), keep=("lon", "lat"))
-    return f"""
-SELECT primary_key, lon, lat,
-       {geohash_sql('lon', 'lat', 'duckdb', precision)} AS geohash
-FROM {ll}
-"""
+    staged = steps_sql(f"({source_sql})",
+                       inverse_steps() + geohash_steps(precision),
+                       keep=("lon", "lat", "geohash"))
+    return f"SELECT primary_key, lon, lat, geohash FROM {staged}"
 
 
 # ------------------------------------------------------ great-circle (hub)
@@ -689,7 +670,7 @@ def rect_cover_cells(rects: DataFrame, res: int = COVER_RES,
             "*",
             F.explode(F.sequence("_iy0", "_iy1")).alias("iy"),
         )
-        .withColumn("cell_id", F.expr(cell_sql("ix", "iy", "spark")))
+        .withColumn("cell_id", F.expr(cell_sql("ix", "iy")))
         .drop("_ix0", "_ix1", "_iy0", "_iy1")
     )
 
@@ -772,7 +753,7 @@ def cell_density_histogram(points: DataFrame, res: int = DEFAULT_RES,
 def cell_density_histogram_sql(source_sql: str, res: int = DEFAULT_RES,
                                bbox=DEFAULT_BBOX) -> str:
     ix, iy = quantize_exprs("x", "y", res, bbox)
-    cell = cell_sql(ix, iy, "duckdb")
+    cell = cell_sql(ix, iy)
     return f"""
 WITH per_cell AS (
   SELECT {cell} AS cell_id, CAST(count(*) AS BIGINT) AS n_points

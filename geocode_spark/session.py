@@ -1,9 +1,24 @@
 """SparkSession factory tuned for the engine.
 
-Local-mode testing runs on local[N]; the same configs are what we would ship
+Local-mode testing runs on local[N]; the SQL configs are what we would ship
 in spark-submit --conf for a real multi-executor cluster (AQE, Arrow, sensible
 shuffle parallelism). UTC session timezone pins timestamp semantics so the
 DuckDB oracle (UTC-naive) compares cleanly.
+
+Every session runs its Python workers from the engine's worker module,
+`pyspark_geocode_worker` at the repository root. PySpark's stock worker
+calls `importlib.invalidate_caches()` before each task, which under
+CPython 3.11 re-reads pyspark.zip's whole directory once per zip importer:
+about 0.25 CPU-s per task, whatever the row count. The module installs a
+guard that re-reads an archive only when its stat (mtime, size, inode)
+changed, so a zip shipped with `addPyFile` mid-session, or replaced in
+place, still imports as before. The daemon imports the module from the
+workers' PYTHONPATH, so the session puts the repository root there
+itself: a driver started from any directory gets a daemon that starts.
+That path is the driver's checkout, so this wiring assumes the workers
+share the driver's filesystem, as they do in local mode; on a cluster the
+module would have to be shipped to the executors first. The `spark-submit`
+jobs (`jobs/*.py`) build their own sessions and run the stock worker.
 """
 
 from __future__ import annotations
@@ -11,6 +26,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WORKER_MODULE = "pyspark_geocode_worker"
 
 
 def get_spark(
@@ -46,6 +64,8 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.worker.module", WORKER_MODULE)
+        .config("spark.executorEnv.PYTHONPATH", ROOT)
     )
     if small_input:
         builder = (

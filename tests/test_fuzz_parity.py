@@ -215,7 +215,7 @@ def test_cell_encode_parity_fuzz(spark, pts):
     pdf, sdf = _coord_frames(spark, pts)
     got_spark = sdf.selectExpr(
         "i", f"{ix} AS ix", f"{iy} AS iy",
-        f"{cell_sql(ix, iy, 'spark')} AS cell_id",
+        f"{cell_sql(ix, iy)} AS cell_id",
     ).toPandas()
     con = duckdb.connect()
     try:

@@ -101,6 +101,24 @@ def test_extract_addresses_single_arrow_stage(spark):
     assert plan.count("ArrowEvalPython") == 1
 
 
+@pytest.mark.parametrize("name", [
+    "metrics_by_grid_salted",  # geocode_metrics_by_grid
+    "metrics_rollup",
+    "tile_rollup_salted",  # over __spark_entry__._success_points
+    "knn_cells",  # idem
+])
+def test_success_row_queries_plan_kernel_once(spark, name):
+    """Queries over a geocode result's matches (message IS NULL) run the
+    geocode kernel once: no Filter on `message` reaches below the stage's
+    projection, where the optimizer would inline the kernel into its
+    condition and plan a second ArrowEvalPython. The persisted point
+    relation of the spatial queries renders inside their plans."""
+    import __spark_entry__ as mod
+
+    plan = _plan(mod.queries()[name](spark, SF_DIR))
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
 def _batch_filter_lines(plan: str) -> list:
     """Indexes of the plan lines that are a Filter on the batch key hash."""
     return [

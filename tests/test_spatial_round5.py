@@ -97,6 +97,17 @@ def test_geohash_matches_textbook_bisection(spark, utah_points):
         assert gh[0] == "9" and gh[1] in "xr", (pk, gh)
 
 
+def test_geohash_every_precision_matches_textbook_bisection(spark,
+                                                            utah_points):
+    """Odd and even bit counts alike: at an even precision lon takes the
+    odd bit positions of the interleave."""
+    for precision in (1, 6, 8, 12):
+        rows = geohash_encode(utah_points, precision=precision).collect()
+        for r in rows:
+            assert r.geohash == _geohash_bisect(r.lon, r.lat, precision), (
+                precision, r.primary_key)
+
+
 def test_geohash_prefix_is_spatial(spark):
     """Two points metres apart share a long prefix; far points diverge
     early — the prefix-joinability property the operator exists for."""
