@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import DEFAULT_ACCEPT_SCORE
+from .indexfile import IndexFile
 from .match import (  # noqa: F401  (the matcher's constants, re-exported)
     _POBOX_NAME,
     BASE_SCORE_AP,
@@ -68,7 +69,6 @@ from .match import (  # noqa: F401  (the matcher's constants, re-exported)
     MSG_MISSING_TMPL,
     MSG_NO_CANDIDATES,
     PRIORITY,
-    IndexFile,
     LocatorIndex,
     match,
 )

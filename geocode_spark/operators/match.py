@@ -44,20 +44,14 @@ Index layout (LocatorIndex.ARRAYS):
                  `tail` is the locator part of matchAddress
   strings        sorted vocabulary of the candidate string columns
 
-Sharing: IndexFile.publish writes the arrays to ONE file and ships it with
-SparkContext.addFile; each Python worker maps that file read-only
-(IndexFile.load), so the index's pages sit once in the page cache however
-many workers probe it, and no worker builds a private copy.
+Sharing: a LocatorIndex is an index class of operators.indexfile (it
+names its arrays in ARRAYS and its key widths in `meta`), so
+IndexFile.publish writes it to ONE file that each Python worker maps
+read-only (IndexFile.load returns the LocatorIndex); kNN's cell index
+ships the same way.
 """
 
 from __future__ import annotations
-
-import atexit
-import mmap
-import os
-import shutil
-import tempfile
-import uuid
 
 import numpy as np
 import pandas as pd
@@ -205,7 +199,8 @@ def _vocabulary(col) -> tuple[np.ndarray, np.ndarray]:
 # ---------------------------------------------------------------- the index
 class LocatorIndex:
     """Columnar, read-only view of a locator pack (layout in the module
-    docstring). Build it with from_pack; share it with IndexFile."""
+    docstring). Build it with from_pack; share it with
+    indexfile.IndexFile."""
 
     ARRAYS = ("zones", "names", "keys", "offsets", "src", "pri",
               "base_score", "cand_id", "valid", "from_addr", "to_addr",
@@ -316,77 +311,6 @@ class LocatorIndex:
         hit[hit] = self.keys[pos[hit]] == key[hit]
         rows, pos = rows[hit], pos[hit]
         return rows, self.offsets[pos], self.offsets[pos + 1]
-
-
-# ------------------------------------------------------------ the shipping
-_SCRATCH: list[str] = []
-
-
-def _scratch_dir() -> str:
-    if not _SCRATCH:
-        d = tempfile.mkdtemp(prefix="geocode-index-")
-        atexit.register(shutil.rmtree, d, True)
-        _SCRATCH.append(d)
-    return _SCRATCH[0]
-
-
-# the indexes this process has mapped, by file name: a Python worker serves
-# many tasks, and each task unpickles its own IndexFile
-_MAPPED: dict[str, LocatorIndex] = {}
-_MAPPED_MAX = 8
-
-
-class IndexFile:
-    """A published LocatorIndex: the picklable handle a UDF closure carries
-    (file name, array layout, key widths), never the arrays themselves."""
-
-    def __init__(self, name: str, layout: dict, meta: dict):
-        self.name = name
-        self.layout = layout
-        self.meta = meta
-
-    @classmethod
-    def publish(cls, index: LocatorIndex, sc) -> IndexFile:
-        """Write the index to one file and add it to the SparkContext."""
-        path = os.path.join(_scratch_dir(),
-                            f"locator-index-{uuid.uuid4().hex}.bin")
-        layout, offset = {}, 0
-        with open(path, "wb") as f:
-            for name in LocatorIndex.ARRAYS:
-                a = np.ascontiguousarray(getattr(index, name))
-                pad = -offset % 64
-                f.write(b"\0" * pad)
-                offset += pad
-                layout[name] = (a.dtype.str, len(a), offset)
-                f.write(a.tobytes())
-                offset += a.nbytes
-        sc.addFile(path)
-        return cls(os.path.basename(path), layout, index.meta)
-
-    def load(self) -> LocatorIndex:
-        """The index, as this process's read-only mapping of the published
-        file (mapped once per process)."""
-        index = _MAPPED.get(self.name)
-        if index is None:
-            from pyspark import SparkFiles
-
-            index = self._map(SparkFiles.get(self.name))
-            if len(_MAPPED) >= _MAPPED_MAX:
-                _MAPPED.pop(next(iter(_MAPPED)))
-            _MAPPED[self.name] = index
-        return index
-
-    def _map(self, path: str) -> LocatorIndex:
-        with open(path, "rb") as f:
-            buf = (mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ)
-                   if os.fstat(f.fileno()).st_size else b"")
-        arrays = {
-            name: (np.frombuffer(buf, dtype=np.dtype(dt), count=n,
-                                 offset=offset)
-                   if n else np.empty(0, dtype=np.dtype(dt)))
-            for name, (dt, n, offset) in self.layout.items()
-        }
-        return LocatorIndex(arrays, **self.meta)
 
 
 # ---------------------------------------------------------------- the match

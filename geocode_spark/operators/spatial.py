@@ -17,15 +17,20 @@ arithmetic that runs identically in Spark SQL and DuckDB:
 Every formula here is generated ONCE as a SQL string that both engines parse
 (the shifts are the `<<` / `>>` operators), so the Spark plan and the DuckDB
 oracle execute the exact same IEEE-754 / integer operations — results
-hash-compare bitwise.
+hash-compare bitwise. kNN's numpy kernel (operators.cellindex) is the one
+exception: it restates the quantization and knn_sql's distance in their
+operation order, and its differential tests compare it with knn_sql bit for
+bit.
 
 Scale notes (100 TB):
  - cell encode / tile assign: pure column arithmetic, whole-stage codegen, no
    shuffle, no Python.
- - kNN: candidate side (locators) is broadcast; the query side explodes into 9
-   neighbor-cell probes (bounded ×9 blowup) and equi-joins on (ix, iy) — no
-   cartesian product. The only shuffle is the per-key top-k window, keyed on
-   the UNIQUE primary key (skew-free by construction).
+ - kNN: the candidate side is bucketed ONCE per candidate relation into a
+   columnar CellIndex (sorted cell keys plus offsets) that every Python
+   worker maps read-only (operators.indexfile). Each call is one mapInArrow
+   stage over the points: a point scans the candidates of its 3x3 neighbour
+   cells and keeps its top-k. The top-k is local to the row, so there is no
+   join, no window and no shuffle, and the probe side is never exploded.
  - point-in-polygon: broadcast join against the (tiny) polygon table with a
    convex cross-product containment predicate — no shuffle of the big side.
 """
@@ -37,6 +42,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..steps import Steps
+from .cellindex import _NEIGHBOR_OFFSETS, CellIndex
+from .indexfile import IndexFile
 
 # Bounding box covering the fixture lattice (UTM 12N meters) with margin.
 DEFAULT_BBOX = (370000.0, 4390000.0, 440000.0, 4460000.0)  # x0, y0, x1, y1
@@ -47,8 +54,6 @@ DEFAULT_RES = 6  # 2^6 = 64 cells/axis -> ~1094 m cells over the 70 km bbox
 # pair count ~9*|points| instead of the ~800x blowup res 6 produced.
 KNN_RES = 9
 DEFAULT_TILE = 1000.0  # raster tile size in meters
-
-_NEIGHBOR_OFFSETS = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
 
 _SPREAD_MASKS = ((8, 0x00FF00FF), (4, 0x0F0F0F0F), (2, 0x33333333), (1, 0x55555555))
 
@@ -112,52 +117,56 @@ def with_cell(df: DataFrame, x: str = "x", y: str = "y", res: int = DEFAULT_RES,
 
 
 # ----------------------------------------------------------------------- kNN
-_DIST_SQ = "((q_x - c_x) * (q_x - c_x) + (q_y - c_y) * (q_y - c_y))"
+KNN_SCHEMA = "primary_key string, rank bigint, cand_id bigint, dist_sq double"
 
 
-def _ranked_topk(pairs: DataFrame, k: int) -> DataFrame:
-    """Deterministic top-k per primary_key: order by (dist_sq, cand_id)."""
-    w = Window.partitionBy("primary_key").orderBy(
-        F.col("dist_sq").asc(), F.col("cand_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("primary_key", "rank", "cand_id", "dist_sq")
-    )
+def cell_index(candidates: DataFrame, res: int = KNN_RES,
+               bbox=DEFAULT_BBOX) -> IndexFile:
+    """The candidates as a CellIndex, published to the workers as one file:
+    collected, built and shipped once per candidate relation and grid
+    (memoized, dropped by caching.clear_caches). A call with the very
+    candidates DataFrame of an earlier call skips deriving its plan; other
+    calls compare plans (DataFrame.sameSemantics), so a re-read of the same
+    files hits too."""
+    from ..caching import memo_lookup, model_memo
+
+    key = ("cell_index", res, tuple(bbox))
+    sources = (candidates,)
+    index = memo_lookup(key, sources)
+    if index is not None:
+        return index
+    anchor = candidates.select("cand_id", "x", "y")
+
+    def build():
+        cells = CellIndex.from_arrow(anchor.toArrow(), res, bbox)
+        return IndexFile.publish(cells, anchor.sparkSession.sparkContext)
+
+    return model_memo(key, anchor, build, sources=sources)
 
 
 def knn_cell(points: DataFrame, candidates: DataFrame, k: int = 3,
              res: int = KNN_RES, bbox=DEFAULT_BBOX) -> DataFrame:
-    """Cell-bucketed kNN: candidates restricted to the 3x3 neighbor cells.
+    """Cell-bucketed kNN: each point's k nearest candidates among those in
+    the 3x3 cells around its own, by (dist_sq, cand_id) — knn_sql's rows.
 
-    points:     (primary_key, x, y);  candidates: (cand_id, x, y) — broadcast.
-    The 9-offset explode keeps the join strictly equi on (ix, iy): no range
-    predicate, no cartesian blowup; probe fan-out is a constant 9.
-    """
-    q = with_cell(
-        points.select("primary_key", F.col("x").alias("q_x"), F.col("y").alias("q_y")),
-        "q_x", "q_y", res, bbox,
-    )
-    offsets = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx, dy in _NEIGHBOR_OFFSETS
-        ]
-    )
-    q = q.withColumn("o", F.explode(offsets)).select(
-        "primary_key", "q_x", "q_y",
-        (F.col("ix") + F.col("o.dx")).alias("jx"),
-        (F.col("iy") + F.col("o.dy")).alias("jy"),
-    )
-    c = with_cell(
-        candidates.select("cand_id", F.col("x").alias("c_x"), F.col("y").alias("c_y")),
-        "c_x", "c_y", res, bbox,
-    )
-    pairs = q.join(
-        F.broadcast(c), on=[q.jx == c.ix, q.jy == c.iy], how="inner"
-    ).select("primary_key", "cand_id", F.expr(_DIST_SQ).alias("dist_sq"))
-    return _ranked_topk(pairs, k)
+    points: (primary_key, x, y); candidates: (cand_id, x, y), bucketed once
+    into a shared CellIndex (cell_index). The plan is one mapInArrow stage
+    over the points: a point's top-k is local to its row, so there is no
+    join, no window and no exchange."""
+    index = cell_index(candidates, res, bbox)
+
+    # the stage pickles this closure, and a worker imports the modules of
+    # the names it uses: cellindex and indexfile, not this module
+    def kernel(batches):
+        cells = index.load()
+        for batch in batches:
+            yield cells.topk(batch, k)
+
+    return points.select(
+        F.col("primary_key").cast("string"),
+        F.col("x").cast("double"),
+        F.col("y").cast("double"),
+    ).mapInArrow(kernel, KNN_SCHEMA)
 
 
 MAX_CANDIDATE_BROADCAST_ROWS = 2_000_000  # ~48 MB of (id, x, y) doubles
@@ -265,7 +274,7 @@ def knn_bruteforce(points: DataFrame, candidates: DataFrame, k: int = 3,
 
     return q.mapInPandas(
         topk_batches,
-        schema="primary_key string, rank bigint, cand_id bigint, dist_sq double",
+        schema=KNN_SCHEMA,
     )
 
 

@@ -526,10 +526,13 @@ def _kmeans_centroids(emb: DataFrame, n_centroids: int, iters: int):
                 mat * FIXED_POINT_SCALE, 0
             ).astype(_np.int64)
             for _ in range(iters):
-                ccos = _round_half_up(
-                    _fold_dots(mat, centmat)
-                    / _np.sqrt(_fold_nsq(mat)[:, None] * centnsq[None, :])
-                )
+                # a zero-norm row's cosine is NaN; semdedup's assignment
+                # kernel rejects it, so it must not warn here first
+                with _np.errstate(divide="ignore", invalid="ignore"):
+                    ccos = _round_half_up(
+                        _fold_dots(mat, centmat)
+                        / _np.sqrt(_fold_nsq(mat)[:, None] * centnsq[None, :])
+                    )
                 cell = _np.argsort(-ccos, axis=1, kind="stable")[:, 0]
                 new = centmat.copy()
                 for j in range(len(centid)):

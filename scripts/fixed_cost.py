@@ -12,10 +12,18 @@ locator pack, and stages the 5,000 pages through ``extract_and_parse``.
 It then times, after one unmeasured warm-up each, ``--reps`` repetitions
 of:
 
-``plan_build``      building the ``geocode_pages`` DataFrame
-``executed_plan``   building it and planning it (``executedPlan()``)
-``write_20``        a ``geocode_parsed`` write of 20 staged parsed rows
-``write_5000``      a ``geocode_parsed`` write of all 5,000 staged rows
+``plan_build``        building the ``geocode_pages`` DataFrame
+``executed_plan``     building it and planning it (``executedPlan()``)
+``write_20``          a ``geocode_parsed`` write of 20 staged parsed rows
+``write_5000``        a ``geocode_parsed`` write of all 5,000 staged rows
+``knn_cell``          a ``knn_cell(k=3)`` write of the 25,000 points
+                      against the address points
+``point_in_polygon``  a ``point_in_polygon`` write of the points against
+                      the grid polygons
+``tile_rollup``       a ``tile_rollup`` write of the points
+
+The last three are the benchmark's spatial pass (``address_table``'s
+``followup_cpu_s``), one operator at a time.
 
 and prints one JSON line: per step, the median and the quartiles of the
 CPU seconds of the Spark JVM and its Python workers (``procmem.tree_cpu_s``,
@@ -87,6 +95,11 @@ def main(argv=None) -> int:
             geocode_parsed,
             pack_locators,
         )
+        from geocode_spark.operators.spatial import (
+            knn_cell,
+            point_in_polygon,
+            tile_rollup,
+        )
         from geocode_spark.plans.pipeline import geocode_pages, load_locators
 
         locs = load_locators(spark, str(fix))
@@ -107,12 +120,21 @@ def main(argv=None) -> int:
             geocode_pages(pages, locs, **GEOCODE_KW)._jdf \
                 .queryExecution().executedPlan()
 
-        def write(rows):
-            return lambda: geocode_parsed(rows, **locs, **GEOCODE_KW) \
-                .write.mode("overwrite").parquet(out)
+        def write(plan):
+            return lambda: plan().write.mode("overwrite").parquet(out)
 
+        def matched(rows):
+            return write(lambda: geocode_parsed(rows, **locs, **GEOCODE_KW))
+
+        points = spark.read.parquet(str(fix / "points"))
+        polys = spark.read.parquet(str(fix / "grid_polygons.parquet"))
         steps = {"plan_build": plan_build, "executed_plan": executed_plan,
-                 "write_20": write(few), "write_5000": write(parsed)}
+                 "write_20": matched(few), "write_5000": matched(parsed),
+                 "knn_cell": write(lambda: knn_cell(
+                     points, locs["address_points"], k=3)),
+                 "point_in_polygon": write(lambda: point_in_polygon(
+                     points, polys)),
+                 "tile_rollup": write(lambda: tile_rollup(points))}
         result = {name: _measure(step, args.reps)
                   for name, step in steps.items()}
     finally:

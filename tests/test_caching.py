@@ -121,3 +121,76 @@ def test_clear_caches_builds_fresh_index(spark, fixtures_dir):
     after = locator_index(pack_locators(**locs, pobox=True))
     assert after is not before and after.name != before.name
     assert sorted(geocode(addr, pobox=True, **locs).collect()) == rows
+
+
+def test_cell_index_built_once_per_candidate_relation(spark, fixtures_dir,
+                                                      monkeypatch):
+    """knn_cell builds its cell index once per candidate relation: the very
+    DataFrame hits without a plan comparison, a re-read of the same parquet
+    hits on the plan, and after clear_caches() the next call builds and
+    publishes a new index; results are unchanged."""
+    import geocode_spark.operators.spatial as sp
+    from geocode_spark.caching import clear_caches
+
+    builds = []
+    build = sp.CellIndex.from_arrow.__func__
+
+    def counting(cls, *args, **kw):
+        builds.append(1)
+        return build(cls, *args, **kw)
+
+    monkeypatch.setattr(sp.CellIndex, "from_arrow", classmethod(counting))
+    path = f"{fixtures_dir}/address_points.parquet"
+    cands = spark.read.parquet(path)
+    pts = cands.selectExpr("CAST(cand_id AS STRING) AS primary_key",
+                           "x + 50.0 AS x", "y AS y")
+    first = sp.cell_index(cands)
+    rows = sorted(sp.knn_cell(pts, cands, k=3).collect())
+    assert sp.cell_index(cands) is first
+    assert sp.cell_index(spark.read.parquet(path)) is first
+    assert len(builds) == 1 and rows  # effect size: neighbours exist
+    clear_caches()
+    after = sp.cell_index(cands)
+    assert after is not first and after.name != first.name
+    assert len(builds) == 2
+    assert sorted(sp.knn_cell(pts, cands, k=3).collect()) == rows
+    assert len(builds) == 2
+
+
+def test_index_kinds_round_trip_through_pickle(spark, fixtures_dir):
+    """Both index classes travel as a pickled IndexFile and load back from
+    the published file as their own class, with the built arrays."""
+    import pickle
+
+    import numpy as np
+
+    from geocode_spark.operators import indexfile
+    from geocode_spark.operators.cellindex import CellIndex
+    from geocode_spark.operators.geocode import locator_index, pack_locators
+    from geocode_spark.operators.match import LocatorIndex
+    from geocode_spark.operators.spatial import (
+        DEFAULT_BBOX,
+        KNN_RES,
+        cell_index,
+    )
+    from geocode_spark.plans.pipeline import load_locators
+
+    pack = pack_locators(**load_locators(spark, fixtures_dir), pobox=True)
+    cands = spark.read.parquet(f"{fixtures_dir}/address_points.parquet")
+    built = {
+        LocatorIndex: LocatorIndex.from_pack(pack.toArrow()),
+        CellIndex: CellIndex.from_arrow(
+            cands.select("cand_id", "x", "y").toArrow(), KNN_RES,
+            DEFAULT_BBOX),
+    }
+    for handle in (locator_index(pack), cell_index(cands)):
+        copy = pickle.loads(pickle.dumps(handle))
+        indexfile._MAPPED.pop(copy.name, None)  # map the file afresh
+        index = copy.load()
+        want = built[copy.kind]
+        assert type(index) is copy.kind
+        assert index.meta == want.meta
+        assert len(index.keys) > 0
+        for name in copy.kind.ARRAYS:
+            np.testing.assert_array_equal(getattr(index, name),
+                                          getattr(want, name))

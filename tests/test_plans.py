@@ -119,6 +119,21 @@ def test_success_row_queries_plan_kernel_once(spark, name):
     assert plan.count("ArrowEvalPython") == 1, plan
 
 
+def test_knn_cell_one_arrow_stage_no_shuffle(spark, fixtures_dir):
+    """kNN probes the shared cell index inside one mapInArrow stage over
+    the points: no join (the candidates are not broadcast), no Window and
+    no Exchange (a point's top-k is local to its row)."""
+    from geocode_spark.operators.spatial import knn_cell
+
+    cands = spark.read.parquet(f"{fixtures_dir}/address_points.parquet")
+    pts = cands.selectExpr("CAST(cand_id AS STRING) AS primary_key", "x", "y")
+    plan = _plan(knn_cell(pts, cands, k=3))
+    assert plan.count("MapInArrow") == 1, plan
+    assert not _JOIN.search(plan), plan
+    assert "Window" not in plan and "Exchange" not in plan, plan
+    assert "ArrowEvalPython" not in plan, plan
+
+
 def _batch_filter_lines(plan: str) -> list:
     """Indexes of the plan lines that are a Filter on the batch key hash."""
     return [

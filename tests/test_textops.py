@@ -554,14 +554,21 @@ def test_semdedup_oversized_cell_raises(spark):
 
 
 def test_semdedup_zero_norm_embedding_raises(spark):
+    import warnings
+
     import pytest as _pytest
 
     from geocode_spark.textops.similarity import semdedup
 
     rows = [(0, [1.0, 0.0]), (1, [0.0, 0.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    with _pytest.raises(Exception, match="zero-norm"):
-        semdedup(df, n_centroids=1, iters=1).collect()
+    # the driver-side Lloyd loop sees the zero-norm row first: it must
+    # leave the error to the assignment kernel without a RuntimeWarning
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        with _pytest.raises(Exception, match="zero-norm"):
+            semdedup(df, n_centroids=1, iters=1).collect()
+    assert not [w for w in seen if issubclass(w.category, RuntimeWarning)]
 
 
 def test_dedup_keep_best_elects_longest_then_lowest_id(spark):
