@@ -13,7 +13,9 @@ geocode.py:201-207). Here it is pure data logic:
                              >= acceptScore (default 70, geocode.py:28,206),
                              top-1 per row; scoring spec in match.py
   J7  output x/y in the locator's spatial reference (26912, geocode.py:25),
-      re-expressed by operators.projection when another wkid is asked for
+      re-expressed inside the same stage when another wkid is asked for:
+      the kernel's last step runs projection.reproject_matches, the TM
+      step list evaluated in numpy (steps.eval_steps), on matched rows
 
 Physical shape (what .explain must show): ONE ArrowEvalPython over the
 input scan, no join and no exchange. All locator sources unify into a single
@@ -72,6 +74,7 @@ from .match import (  # noqa: F401  (the matcher's constants, re-exported)
     LocatorIndex,
     match,
 )
+from .projection import reprojector
 
 
 # ------------------------------------------------------- staged parsed rows
@@ -266,14 +269,6 @@ def locator_index(pack: DataFrame) -> IndexFile:
     return model_memo(("locator_index", id(pack)), pack, build)
 
 
-def _in_reference(result: DataFrame, spatial_reference: int) -> DataFrame:
-    if spatial_reference == 26912:
-        return result
-    from .projection import reproject_result
-
-    return reproject_result(result, wkid=spatial_reference)
-
-
 # --------------------------------------------------------------- the operator
 def geocode(
     input_df: DataFrame,
@@ -292,8 +287,9 @@ def geocode(
     parse_input(cleanse_input(df, ...)) and call geocode_parsed. `locators`
     in {'all','addressPoints','roadCenterlines'} (reference
     geocode.py:26,128). `spatial_reference` re-expresses output x/y (J7,
-    geocode.py:25,115,204): 26912 native or 4326 via the from-scratch
-    transverse-Mercator inverse.
+    geocode.py:25,115,204): 26912 native, or any wkid projection.py
+    supports, projected in the same Arrow stage right after the match
+    (error rows keep 0/0); an unsupported wkid raises here.
 
     Select result rows by a result column (`message IS NULL`) inside an
     aggregate or over a materialized result, not with a Filter right over
@@ -303,25 +299,25 @@ def geocode(
     """
     from ..extraction import cleanse_parse_batch
 
+    project = reprojector(spatial_reference)
     index = locator_index(pack_locators(
         address_points, road_centerlines, pobox_points, locators=locators,
         pobox=pobox))
 
     # the UDF pickles this closure, and a worker imports the modules of
-    # the names it uses: extraction and match, not this module
+    # the names it uses: extraction, match and projection, not this module
     def kernel(street: pd.Series, zone: pd.Series) -> pd.DataFrame:
-        return match(cleanse_parse_batch(street, zone), index.load(),
-                     accept_score)
+        return project(match(cleanse_parse_batch(street, zone),
+                             index.load(), accept_score))
 
     street = F.col("street").cast("string")
     zone = F.col("zone").cast("string")
-    result = input_df.select(
+    return input_df.select(
         F.col("id").cast("string").alias("primary_key"),
         street.alias("input_street"),
         zone.alias("input_zone"),
         F.pandas_udf(kernel, MATCH_TYPE)(street, zone).alias("_m"),
     ).select("primary_key", "input_street", "input_zone", "_m.*")
-    return _in_reference(result, spatial_reference)
 
 
 def geocode_parsed(
@@ -340,8 +336,10 @@ def geocode_parsed(
     cleansed_zone, zone_key and the six parse fields — the staged schema
     that parse_input(cleanse_input(df)) and extraction.extract_and_parse
     produce, both with extraction's cleanse/parse kernel — and optionally
-    the F5 `error` column.
+    the F5 `error` column. `spatial_reference` is geocode()'s, projected
+    in this stage too.
     """
+    project = reprojector(spatial_reference)
     index = locator_index(pack_locators(
         address_points, road_centerlines, pobox_points, locators=locators,
         pobox=pobox))
@@ -360,13 +358,12 @@ def geocode_parsed(
     def kernel(rows: pd.DataFrame) -> pd.DataFrame:
         rows["house"] = rows["house"].astype("Int64").mask(
             rows.pop("house_null"))
-        return match(rows, index.load(), accept_score)
+        return project(match(rows, index.load(), accept_score))
 
-    result = base.select(
+    return base.select(
         "primary_key", "input_street", "input_zone",
         F.pandas_udf(kernel, MATCH_TYPE)(rows).alias("_m"),
     ).select("primary_key", "input_street", "input_zone", "_m.*")
-    return _in_reference(result, spatial_reference)
 
 
 def metrics_rollup(result: DataFrame) -> DataFrame:

@@ -20,23 +20,37 @@ we fail fast with the supported list). NAD83 and WGS84 datums differ by <2 m
 Each formula is stated once, as an ordered list of named steps (steps.py):
 `inverse_steps` (UTM -> lon/lat) and `forward_steps` (lon/lat -> the
 output kind: UTM, 3857 or 4326). Every step is an expression over functions
-common to Spark SQL and DuckDB (sin/cos/tan/sqrt/ln/radians/degrees and
-arithmetic) that reads earlier steps by name. The engine runs a list as a
-chain of Spark columns and the DuckDB oracle as a chain of subqueries, so
-both engines compute the *identical* formula in the same operation order.
-Outputs are rounded to 6 decimal degrees (~0.1 m) / 0.001 m so sub-ulp libm
-differences between the JVM and DuckDB cannot flip the value hash.
+common to Spark SQL and DuckDB (sin/cos/tan/sqrt/ln/radians/degrees, round
+and arithmetic) that reads earlier steps by name, and all three runners of
+steps.py evaluate it in the same operation order.
+
+J7 runs inside the Arrow stage that holds the batch: geocode() and
+geocode_parsed() apply `reproject_matches` (steps.eval_steps over numpy)
+to each batch right after the match, and `reproject_result` is one Arrow
+stage over (x, y, message) running the same function. The DuckDB oracle
+(`reproject_oracle_sql`) runs the same list as a chain of subqueries, and
+the runner reproduces it bit for bit. Outputs are rounded to 6 decimal
+degrees (~0.1 m) / 0.001 m, so a last-bit libm difference between the JVM
+and the C library flips a value only where it lands within an ulp of a
+rounding half. Spark still runs the inverse list as columns where SQL-only
+steps follow it (spatial.geohash_encode, spatial.nearest_hub and the
+utm_wgs84_roundtrip contract query).
 """
 
 from __future__ import annotations
 
+import functools
 import math
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+import numpy as np
+import pandas as pd
 
-from ..steps import Steps, steps_sql, with_steps
+from ..steps import Steps, eval_steps, steps_sql
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 _K0 = 0.9996
 _E0 = 500000.0  # UTM false easting
@@ -200,27 +214,66 @@ def forward_steps(wkid: int, lon: str = "lon", lat: str = "lat",
 
 
 def _reproject_steps(wkid: int) -> Steps:
-    """Native x/y -> the `wkid` coordinates as `_fx`/`_fy`."""
+    """Native x/y -> the `wkid` coordinates as `_fx`/`_fy`. Raises
+    ValueError for an unsupported wkid."""
     return (inverse_steps(lon="_lon", lat="_lat")
             + forward_steps(wkid, "_lon", "_lat", "_fx", "_fy"))
 
 
-def reproject_result(result: DataFrame, wkid: int = 4326) -> DataFrame:
-    """Re-express a geocode result's x/y in any supported `wkid`.
+def reproject_matches(frame: pd.DataFrame, steps: Steps) -> pd.DataFrame:
+    """`frame` (a batch of geocode results: x, y and message at least) with
+    the x/y of its matched rows (message NULL) replaced by the `_fx`/`_fy`
+    of `steps` (`_reproject_steps`), in place. Every other row gets the
+    reference's literal x=0/y=0 failure sentinel (geocode.py:182)."""
+    ok = frame["message"].isna().to_numpy()
+    xy = eval_steps({c: frame[c].to_numpy(np.float64)[ok] for c in "xy"},
+                    steps, keep=("_fx", "_fy"))
+    for col, step in (("x", "_fx"), ("y", "_fy")):
+        out = np.zeros(len(frame))
+        out[ok] = xy[step].filled(np.nan)
+        frame[col] = out
+    return frame
 
-    Failure rows keep the reference's literal x=0/y=0 sentinel
-    (geocode.py:182) — only success rows are projected.
-    """
+
+def _as_is(frame: pd.DataFrame) -> pd.DataFrame:
+    return frame
+
+
+def reprojector(wkid: int):
+    """batch -> batch with its matched x/y in `wkid`, the last step of the
+    geocode kernels (identity for the native 26912). Built at plan time, so
+    an unsupported wkid raises there; a worker unpickles it by reference."""
+    if wkid == NATIVE_WKID:
+        return _as_is
+    return functools.partial(reproject_matches, steps=_reproject_steps(wkid))
+
+
+def reproject_result(result: DataFrame, wkid: int = 4326) -> DataFrame:
+    """Re-express a geocode result's x/y in any supported `wkid`: one Arrow
+    stage over (x, y, message) running `reproject_matches`. Failure rows
+    keep the x=0/y=0 sentinel; only success rows are projected.
+
+    NULL and NaN both reach the stage as NaN and leave it as NULL, so a
+    success row whose x or y is NaN comes back NULL where the DuckDB
+    oracle keeps NaN; a geocode result never carries one (the match
+    kernel's NaN already leaves its stage as NULL)."""
     if wkid == NATIVE_WKID:
         return result
-    staged = with_steps(result, _reproject_steps(wkid), keep=("_fx", "_fy"))
-    ok = F.col("message").isNull()
-    return staged.withColumns(
-        {
-            "x": F.when(ok, F.col("_fx")).otherwise(F.lit(0.0)),
-            "y": F.when(ok, F.col("_fy")).otherwise(F.lit(0.0)),
-        }
-    ).drop("_fx", "_fy")
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    project = reprojector(wkid)
+
+    def kernel(x: pd.Series, y: pd.Series, message: pd.Series) -> pd.DataFrame:
+        return project(pd.DataFrame({"x": x, "y": y, "message": message}))[
+            ["x", "y"]]
+
+    xy = StructType([StructField("x", DoubleType()),
+                     StructField("y", DoubleType())])
+    staged = result.withColumn("_xy", F.pandas_udf(kernel, xy)(
+        "x", "y", "message"))
+    return staged.select(*(F.col(f"_xy.{c}").alias(c) if c in ("x", "y")
+                           else F.col(c) for c in result.columns))
 
 
 def reproject_oracle_sql(inner_sql: str, wkid: int = 4326) -> str:

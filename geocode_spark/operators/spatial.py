@@ -285,14 +285,19 @@ def knn_sql(fix: str, source_sql: str, k: int = 3, res: int | None = KNN_RES,
     source_sql: relation with (primary_key, x, y). Candidates = the
     address_points fixture."""
     if res is not None:
+        # each side projects its cell as plain columns, so the join is an
+        # equi-join of columns that DuckDB plans as a hash join (over
+        # expressions, its join reordering made it a cross product)
         qix, qiy = quantize_exprs("q.x", "q.y", res, bbox)
         cix, ciy = quantize_exprs("c.x", "c.y", res, bbox)
         offsets = ", ".join(f"({dx}, {dy})" for dx, dy in _NEIGHBOR_OFFSETS)
         join = f"""
-  FROM ({source_sql}) q
-  CROSS JOIN (VALUES {offsets}) AS o(dx, dy)
-  JOIN read_parquet('{fix}/address_points.parquet') c
-    ON {qix} + o.dx = {cix} AND {qiy} + o.dy = {ciy}"""
+  FROM (SELECT q.*, {qix} + o.dx AS _nix, {qiy} + o.dy AS _niy
+        FROM ({source_sql}) q
+        CROSS JOIN (VALUES {offsets}) AS o(dx, dy)) q
+  JOIN (SELECT c.*, {cix} AS _cix, {ciy} AS _ciy
+        FROM read_parquet('{fix}/address_points.parquet') c) c
+    ON q._nix = c._cix AND q._niy = c._ciy"""
     else:
         join = f"""
   FROM ({source_sql}) q

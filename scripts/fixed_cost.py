@@ -21,14 +21,19 @@ of:
 ``point_in_polygon``  a ``point_in_polygon`` write of the points against
                       the grid polygons
 ``tile_rollup``       a ``tile_rollup`` write of the points
+``geocode_26912``     a ``geocode()`` write of the 10,000 address rows in
+                      the locators' native spatial reference
+``geocode_4326``      the same write in WGS84 lon/lat (``address_table``'s
+                      pass); the difference is the projection's cost
 
-The last three are the benchmark's spatial pass (``address_table``'s
+The spatial three are the benchmark's spatial pass (``address_table``'s
 ``followup_cpu_s``), one operator at a time.
 
 and prints one JSON line: per step, the median and the quartiles of the
 CPU seconds of the Spark JVM and its Python workers (``procmem.tree_cpu_s``,
-the benchmark's CPU measure), the median CPU seconds of this driver process
-(plan construction in Python runs there) and the median wall seconds.
+the benchmark's CPU measure), the medians of the JVM's and the workers'
+shares of it, the median CPU seconds of this driver process (plan
+construction in Python runs there) and the median wall seconds.
 The difference ``write_5000 - write_20`` is the per-row cost; ``write_20``
 is almost all fixed cost.
 """
@@ -51,7 +56,7 @@ sys.path[:0] = [str(ROOT), str(PERFBENCH)]
 
 import inputs  # noqa: E402  (perfbench/inputs.py)
 import run as perfrun  # noqa: E402  (perfbench/run.py)
-from procmem import tree_cpu_s  # noqa: E402
+from procmem import _TICK_S, _comm, _cpu_ticks, descendants  # noqa: E402
 
 GEOCODE_KW = {"locators": "all", "pobox": True}
 
@@ -61,16 +66,34 @@ def _quartiles(xs: list[float]) -> list[float]:
     return [q[0], q[2]]
 
 
+def _split_cpu_s() -> tuple[float, float]:
+    """(JVM, Python workers) CPU seconds used so far by this process's
+    descendants; their sum is ``procmem.tree_cpu_s``."""
+    jvm = workers = 0
+    for p in descendants(os.getpid()):
+        if _comm(p) == "java":
+            jvm += _cpu_ticks(p)
+        else:
+            workers += _cpu_ticks(p)
+    return jvm * _TICK_S, workers * _TICK_S
+
+
 def _measure(step, reps: int) -> dict:
     step()  # warm-up: lazy set-up and JIT compilation are not fixed cost
-    tree, driver, wall = [], [], []
+    tree, jvm, workers, driver, wall = [], [], [], [], []
     for _ in range(reps):
-        t0, c0, d0 = time.perf_counter(), tree_cpu_s(), time.process_time()
+        t0, (j0, w0), d0 = (time.perf_counter(), _split_cpu_s(),
+                            time.process_time())
         step()
         wall.append(time.perf_counter() - t0)
-        tree.append(tree_cpu_s() - c0)
+        j1, w1 = _split_cpu_s()
+        jvm.append(j1 - j0)
+        workers.append(w1 - w0)
+        tree.append(jvm[-1] + workers[-1])
         driver.append(time.process_time() - d0)
     return {"cpu_s": statistics.median(tree), "cpu_s_iqr": _quartiles(tree),
+            "jvm_cpu_s": statistics.median(jvm),
+            "worker_cpu_s": statistics.median(workers),
             "driver_cpu_s": statistics.median(driver),
             "wall_s": statistics.median(wall)}
 
@@ -92,6 +115,7 @@ def main(argv=None) -> int:
     try:
         from geocode_spark.extraction import extract_and_parse
         from geocode_spark.operators.geocode import (
+            geocode,
             geocode_parsed,
             pack_locators,
         )
@@ -126,6 +150,11 @@ def main(argv=None) -> int:
         def matched(rows):
             return write(lambda: geocode_parsed(rows, **locs, **GEOCODE_KW))
 
+        def geocoded(wkid):
+            return write(lambda: geocode(addresses, **locs, **GEOCODE_KW,
+                                         spatial_reference=wkid))
+
+        addresses = spark.read.parquet(str(fix / "addresses"))
         points = spark.read.parquet(str(fix / "points"))
         polys = spark.read.parquet(str(fix / "grid_polygons.parquet"))
         steps = {"plan_build": plan_build, "executed_plan": executed_plan,
@@ -134,7 +163,9 @@ def main(argv=None) -> int:
                      points, locs["address_points"], k=3)),
                  "point_in_polygon": write(lambda: point_in_polygon(
                      points, polys)),
-                 "tile_rollup": write(lambda: tile_rollup(points))}
+                 "tile_rollup": write(lambda: tile_rollup(points)),
+                 "geocode_26912": geocoded(26912),
+                 "geocode_4326": geocoded(4326)}
         result = {name: _measure(step, args.reps)
                   for name, step in steps.items()}
     finally:

@@ -7,7 +7,10 @@ generated Java exceeded janino's 64 KB method limit: Spark logged
 back to interpreted evaluation — correct results, but interpreted per-row
 cost at 100x scale. Both families now stage their subterms as real columns
 (projection.inverse_steps / forward_steps run by steps.with_steps,
-multimodal._dhash_sample_array).
+multimodal._dhash_sample_array). `geocode_wgs84` no longer generates TM
+code at all (its projection runs in numpy inside the geocode Arrow stage,
+steps.eval_steps); it stays in the probe as a plain geocode query, and
+`utm_wgs84_roundtrip` still compiles the staged TM columns.
 
 The check runs in a SUBPROCESS: CodeGenerator caches compiled (and failed)
 source per generated text, so within a long-lived test session a prior

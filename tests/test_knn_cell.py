@@ -67,9 +67,6 @@ def _assert_oracle(spark, path, k):
                    spark.read.parquet(f"{path}/address_points.parquet"),
                    k=k).toArrow()
     con = duckdb.connect()
-    # join reordering would turn the neighbour-cell equi-join into a cross
-    # product plus filter
-    con.execute("SET disabled_optimizers = 'join_order'")
     want = con.execute(knn_sql(
         path, f"SELECT * FROM read_parquet('{path}/points.parquet')",
         k=k)).arrow()

@@ -3,6 +3,8 @@
 The formulas are step lists (projection.inverse_steps / forward_steps) that
 both engines run staged; the anchors below check the math itself."""
 
+import math
+
 import duckdb
 import pytest
 
@@ -126,3 +128,51 @@ def test_reproject_3857_and_neighbor_zone(spark, fixtures_dir):
         if ok["message"] is None:
             assert xr[0] < ok["x"] < xr[1], (wkid, ok["x"])
             assert yr[0] < ok["y"] < yr[1], (wkid, ok["y"])
+
+
+@pytest.mark.parametrize("op", ["geocode", "reproject_result"])
+def test_reprojection_is_one_arrow_stage(spark, fixtures_dir, op):
+    """J7 runs inside an Arrow stage: geocode(..., spatial_reference=4326)
+    plans its one kernel with the projection fused, and reproject_result
+    one stage over (x, y, message). No TM step (`_tm_`/`_tmf_`) is a
+    column anywhere in the optimized plan."""
+    from geocode_spark.operators.geocode import geocode
+    from geocode_spark.plans.pipeline import load_locators
+
+    if op == "geocode":
+        addr = spark.read.parquet(f"{fixtures_dir}/addresses.parquet")
+        df = geocode(addr, pobox=True, spatial_reference=4326,
+                     **load_locators(spark, fixtures_dir))
+    else:
+        native = spark.createDataFrame(
+            [("a", 425000.0, 4500000.0, None), ("b", 0.0, 0.0, "no match")],
+            "primary_key string, x double, y double, message string")
+        df = reproject_result(native, 4326)
+        assert df.columns == native.columns
+    qe = df._jdf.queryExecution()
+    assert qe.executedPlan().toString().count("ArrowEvalPython") == 1
+    optimized = qe.optimizedPlan().toString()
+    assert "_tm_" not in optimized and "_tmf_" not in optimized, optimized
+
+
+def test_reproject_result_projects_success_rows_only(spark):
+    from geocode_spark.operators.projection import _reproject_steps
+
+    rows = [("a", 425000.0, 4500000.0, None), ("b", 425000.0, 4500000.0, "x"),
+            ("c", None, 4500000.0, None), ("d", float("nan"), 4500000.0, None)]
+    native = spark.createDataFrame(
+        rows, "primary_key string, x double, y double, message string")
+    got = {r["primary_key"]: (r["x"], r["y"])
+           for r in reproject_result(native, 4326).collect()}
+
+    def oracle(x):
+        return duckdb.sql(
+            "SELECT _fx, _fy FROM "
+            + steps_sql(f"(VALUES ({x}::DOUBLE, 4500000.0::DOUBLE)) t(x, y)",
+                        _reproject_steps(4326), keep=("_fx", "_fy"))
+        ).fetchone()
+    # A NaN x/y on a success row leaves the Arrow stage NULL (pandas reads
+    # NULL and NaN alike), where the DuckDB oracle keeps NaN.
+    assert got == {"a": oracle("425000.0"), "b": (0.0, 0.0),
+                   "c": (None, None), "d": (None, None)}
+    assert all(math.isnan(v) for v in oracle("'NaN'"))
